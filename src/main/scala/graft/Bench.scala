@@ -28,10 +28,11 @@ object Bench {
     // Populate the cross-query memo caches (linkage sides, gram frame) and
     // report their build cost as its own metric — otherwise it lands on
     // whichever consumer runs first (q26/q43) and poisons round-over-round
-    // deltas. Steps run as a dependency DAG (each starts when its memo
-    // inputs are built, no wave barriers); warm_sec is the WALL time of
-    // the warm phase, warm_breakdown the per-step elapsed times measured
-    // under that concurrency.
+    // deltas. Every memo builds at once; warm_sec is the WALL time of the
+    // warm phase, and each warm_breakdown value is that memo's own build
+    // seconds (net of the memos it reads), measured under that
+    // concurrency — so the values attribute the phase but need not sum
+    // to warm_sec. A failed memo build fails the bench, naming the memo.
     val warmT0 = System.nanoTime()
     val warmTimes = SparkEntry.runWarm(spark, sfDir)
     val warmSec = (System.nanoTime() - warmT0) / 1e9

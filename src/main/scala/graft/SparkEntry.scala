@@ -27,91 +27,56 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = oracleMap
 
-  /** Populates the cross-query memo caches (linkage side frames, dedup
-    * gram frame) so benchmarks measure steady-state query time, not
-    * whichever query first pays the one-time cache build. Steps run as a
-    * dependency DAG ([[warmDeps]]): each starts the moment its declared
-    * dependencies finish, never at a wave barrier — at bench scale most
-    * memo builds are one- or two-task Spark jobs, so any serialization
-    * beyond the true dependencies is scheduler latency while executor
-    * threads idle (Spark job submission is thread-safe; each memo has its
-    * own lock). The critical path is the longest dependency chain
-    * (linkage_sides → linkage_reffiles → cascade_links), not the sum of
-    * wave maxima.
+  /** Builds every cross-query memo ([[Memo]]: linkage side frames, dedup
+    * gram frame, …) so benchmarks measure steady-state query time, not
+    * whichever query first pays the one-time build.
     */
   def warm(spark: SparkSession, sfDir: String): Unit = {
     runWarm(spark, sfDir); ()
   }
 
-  /** Named memo builds — Bench times each and emits the per-step
-    * `warm_breakdown` map alongside the `warm_sec` (wall-clock) total.
+  /** Every registered memo. Naming the modules first runs their
+    * initializers, which register the memos they declare.
+    */
+  private def memos: Seq[Memo[_]] = {
+    val _ = (queryMap, _root_.graft.operators.Bpe.mergesFor)
+    Memo.registered
+  }
+
+  /** One named step per memo: calling a memo builds and materializes its
+    * frames. Bench reports each step in its `warm_breakdown` map.
     */
   def warmSteps: Seq[(String, (SparkSession, String) => Unit)] =
-    _root_.graft.queries.LinkageQueries.warmSteps ++
-      _root_.graft.queries.PipelineQueries.warmSteps ++
-      _root_.graft.queries.RefFileQueries.warmSteps
+    memos.map(m => m.name -> ((s: SparkSession, d: String) => { m(s, d); () }))
 
-  /** Each step's memo-cache dependencies (a step reads frames another
-    * step builds; running them concurrently would serialize on the memo
-    * lock anyway, with the LOSER's timer charged for the winner's build).
-    * linkage_sides/reffiles share one memoized tuple — sides pays the
-    * build, reffiles forces the remaining cached frames. emb_pairs and
-    * emb_corpus_cells each run their own assignment over the
-    * emb_dup_norms frame; ivf/brute read emb_norms; jaccard_banded joins
-    * the gram frame with the minhash band candidates.
+  /** Runs every memo's build at once, one thread each, and returns
+    * (memo, seconds) where seconds is the memo's own build time in this
+    * call (0 when it was already built). A build that reaches another memo
+    * blocks on that memo's lock, and memo build seconds exclude nested
+    * memo calls, so the wait is not charged to it: no dependency order is
+    * needed. The seconds are measured under concurrency, so they attribute
+    * the warm phase per memo but need not sum to its wall time. After every
+    * step has run, throws if any failed, naming each failed memo.
     */
-  def warmDeps: Map[String, Seq[String]] = Map(
-    "linkage_reffiles" -> Seq("linkage_sides"),
-    "linkage_scored_block" -> Seq("linkage_sides"),
-    "linkage_cost_summary" -> Seq("linkage_sides"),
-    "cascade_links" -> Seq("linkage_sides", "linkage_reffiles"),
-    "jaccard_banded" -> Seq("grams", "minhash_bands"),
-    "ivf_assign" -> Seq("emb_norms"),
-    "brute_knn" -> Seq("emb_norms"),
-    "pq_codes" -> Seq("emb_norms"),
-    "emb_ranked_dup" -> Seq("emb_dup_norms"),
-    "emb_pairs" -> Seq("emb_dup_norms", "emb_ranked_dup"),
-    "emb_corpus_cells" -> Seq("emb_dup_norms", "emb_ranked_dup"),
-    "image_class_pairs" -> Seq("image_sigs"),
-    "reffile_accuracy" -> Seq("reffile_chain"))
-
-  /** Runs [[warmSteps]] as the [[warmDeps]] DAG; returns (step, seconds)
-    * where seconds is the step's own elapsed time (excluding the wait on
-    * its dependencies). A failed step reports its elapsed time and
-    * swallows the error (warm is best-effort; the consuming query will
-    * surface a real failure); its dependents still run.
-    */
-  def runWarm(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val steps = warmSteps
-    val pool = Executors.newFixedThreadPool(math.max(steps.size, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val done = scala.collection.mutable.Map.empty[String, Future[Double]]
-    def futureOf(name: String): Future[Double] = done.synchronized {
-      done.getOrElseUpdate(name, {
-        val f = steps.find(_._1 == name)
-          .map(_._2).getOrElse((_: SparkSession, _: String) => ())
-        Future.sequence(warmDeps.getOrElse(name, Nil).map(futureOf)).map { _ =>
-          val t0 = System.nanoTime()
-          try f(spark, sfDir) catch { case _: Throwable => }
-          (System.nanoTime() - t0) / 1e9
-        }
-      })
+  def runWarm(spark: SparkSession, sfDir: String,
+      steps: Seq[Memo[_]] = memos): Seq[(String, Double)] = {
+    val before = steps.map(_.buildSeconds)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[(String, Throwable)]()
+    val threads = steps.map { m =>
+      new Thread(() =>
+        try { m(spark, sfDir); () }
+        catch { case e: Throwable => failures.add(m.name -> e); () },
+        s"warm-${m.name}")
     }
-    // Create EVERY step's future up front, then await: the previous
-    // await-as-you-create loop only instantiated step k+1's future after
-    // step k completed (dependencies point backward in the list), so the
-    // "DAG" actually executed near-serially — warm wall ≈ sum of step
-    // times in every bench through r18. With eager creation each step
-    // starts the moment its declared dependencies finish and the wall is
-    // the critical path (guide §2.6).
-    val futures = steps.map { case (name, _) => name -> futureOf(name) }
-    val out = futures.map { case (name, f) =>
-      (name, Await.result(f, Duration.Inf))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    if (!failures.isEmpty) {
+      val fs = failures.toArray(Array.empty[(String, Throwable)]).toSeq
+      val e = new RuntimeException("warm failed: " +
+        fs.map { case (name, t) => s"$name ($t)" }.mkString("; "), fs.head._2)
+      fs.tail.foreach { case (_, t) => e.addSuppressed(t) }
+      throw e
     }
-    pool.shutdown()
-    out
+    steps.zip(before).map { case (m, b) => m.name -> (m.buildSeconds - b) }
   }
 }

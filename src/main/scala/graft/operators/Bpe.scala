@@ -149,11 +149,8 @@ object Bpe {
     * specs) share one training run per corpus, the cross-query memo
     * pattern the linkage cascade uses. Bounded: one merge list per dir.
     */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]
-
-  def mergesFor(s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String)] =
-    mergeCache.getOrElseUpdate((s, d),
+  val mergesFor: graft.Memo[Seq[(String, String)]] =
+    graft.Memo[Seq[(String, String)]]("bpe_merges", _ => Nil)((s, d) =>
       trainMerges(graft.Tables.documents(s, d).select("doc_id", "text")))
 
   /** Per-doc subword counts under a trained merge list:

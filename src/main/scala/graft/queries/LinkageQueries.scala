@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryDef
+import graft.{Memo, QueryDef}
 import graft.functions.{GraftFunctions, Phonetics}
 import graft.linkage._
 import graft.operators.Preprocess
@@ -646,154 +646,135 @@ object LinkageQueries {
     * the reference persists its preprocessed files once before the search
     * modules (df_ops.persist). Without this, each query re-runs the
     * phonetic/geokey scalar chains and the probable-GQ aggregation — the
-    * derivation, not the joins, dominates at bench scale. Only the latest
-    * key is kept (switching dir/session unpersists the previous frames).
+    * derivation, not the joins, dominates at bench scale.
     *
     * The input base is cached too: it feeds the GQ aggregation AND both
     * finish() joins, and Spark does not share work across those branches
     * without explicit materialization. It is small (one row per input
-    * record, scalar columns only).
+    * record, scalar columns only). `cpre` rides along for the reference
+    * files ([[refFiles]]); `owned` is every frame this memo cached.
     */
-  private val sideFrames = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (DataFrame, DataFrame, DataFrame, DataFrame, Seq[DataFrame])]
+  private final case class Sides(census: DataFrame, input: DataFrame,
+      cpre: DataFrame, owned: Seq[DataFrame])
 
-  private def sides(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    sideFrames.synchronized {
-      val key = (s, d)
-      val (c, i, nd0, gb0, _) = sideFrames.getOrElse(key, {
-        sideFrames.values.foreach(_._5.foreach(_.unpersist()))
-        sideFrames.clear()
-        // The pre-frames are cached BEFORE derive(): without the barrier,
-        // ProjectionCollapse inlines the noise-class CASE/regex trees into
-        // every phonetic/prefix column (~8 copies per name), and the
-        // resulting mega-expression dominates the derivation cost. The
-        // oracle mirrors this with its MATERIALIZED input_pre/census_pre
-        // CTEs; at 100 TB these would be persisted intermediate tables.
-        // flaggedPersons is cached FIRST so each heavyweight projection
-        // (inputPre's class CASEs, censusPre's stale switches, derive's
-        // phonetics) compiles as its own stage directly over a scan — the
-        // shape whole-stage codegen can method-split (see flaggedPersons).
-        // It is also FANNED OUT to the session parallelism: the local
-        // bench parquet arrives as 1-2 scan partitions (file < split
-        // size), which would run every downstream phonetic/noise
-        // projection single-threaded; a cluster scan splits naturally.
-        val praw = flaggedPersons(s, d)
-          .repartition(s.sessionState.conf.numShufflePartitions).cache()
-        val ipre = inputPre(praw).cache()
-        val ib = derive(ipre).cache()
-        // GQ detection runs on the PRE-expansion frame (one row per input
-        // record — alternate rows must not double-count people at a geokey).
-        val gq = probableGq(ib).cache()
-        // Nickname expansion (reference "Pre-processing": nickname
-        // standardization adds alternate-name rows): every record whose
-        // first name appears as a nickname gains an extra row carrying the
-        // canonical name, with the first-name-derived keys RECOMPUTED from
-        // it. Address-derived columns are reused — the expensive
-        // standardization/geokey work runs once per record, not per
-        // variant. The nickname table is broadcast (tiny dim).
-        val nickDim = broadcast(
-          s.createDataFrame(Preprocess.nicknames).toDF("canonical", "nickname"))
-        val alt = deriveFirst(
-          ib.join(nickDim, ib("first_name") === nickDim("nickname"))
-            .drop("first_name", "nickname")
-            .withColumnRenamed("canonical", "first_name"))
-          .select(ib.columns.map(col): _*)
-        val ibx = ib.unionByName(alt)
-        val cpre = censusPre(praw).cache()
-        val in = finish(ibx, gq, "rec_id").cache()
-        val cen = finish(derive(cpre), gq, "pik").cache()
-        // ---- per-module reference files (the PVS searches FILES, not the
-        // raw census: 03_link_datasets.ipynb NameSearch header, 02 cells
-        // 62/66/70/84). A census-side numident holds an era-0 clean filing
-        // per covered pik plus era-1 refiles: the k%21 subset under the
-        // MARRIED surname, the k%6 subset with an alternate DOB day. The
-        // same Lineage operators that build q72's file dedupe the
-        // alternates and cross name × DOB per pik ("all possible
-        // combinations of alternate names and dates of birth"); name keys
-        // re-derive on the combined rows like the input side's nickname
-        // alternates.
-        val n0 = cpre.select(
-          concat(lit("cn0_"), col("pik")).as("record_id"), col("pik").as("ssn"),
-          col("first_name"), col("last_name"), col("middle_initial"),
-          col("dob_year"), col("dob_month"), col("dob_day"))
-        val n1 = cpre
-          .filter(pmod(col("pik"), lit(21)) === 0 || pmod(col("pik"), lit(6)) === 0)
-          .select(
-            concat(lit("cn1_"), col("pik")).as("record_id"), col("pik").as("ssn"),
-            col("first_name"),
-            when(pmod(col("pik"), lit(21)) === 0, People.marriedLast(col("pik")))
-              .otherwise(col("last_name")).as("last_name"),
-            col("middle_initial"), col("dob_year"), col("dob_month"),
-            when(pmod(col("pik"), lit(6)) === 0, pmod(col("dob_day"), lit(28)) + 1)
-              .otherwise(col("dob_day")).cast("int").as("dob_day"))
-        val cnum = n0.unionByName(n1)
-        val (altN, pN) = Lineage.dedupeRawPreservingSourceRecords(
-          cnum.select("record_id", "ssn", "first_name", "last_name", "middle_initial"),
-          Seq("ssn", "first_name", "last_name", "middle_initial"), "can")
-        val (altD, pD) = Lineage.dedupeRawPreservingSourceRecords(
-          cnum.select("record_id", "ssn", "dob_year", "dob_month", "dob_day"),
-          Seq("ssn", "dob_year", "dob_month", "dob_day"), "cad")
-        val (ndrRaw, _) = Lineage.mergePreservingSourceRecords(
-          altN, pN, altD, pD, Seq("ssn"), "cndr")
-        val nd = deriveNames(ndrRaw.select(
-          col("ssn").as("pik"), col("first_name"), col("last_name"),
-          col("middle_initial"), col("dob_year"), col("dob_month"), col("dob_day")))
-          .cache()
-        // GeoBase = the name/DOB file with each pik's (possibly stale)
-        // census address keys appended (02 cell 84); the GQ null-out rides
-        // in via cen's *_blk columns.
-        val gb = nd.join(
-          cen.select("pik", "zip3", "geokey", "geokey_blk", "street_num_blk",
-            "sdx_street_blk"),
-          Seq("pik")).cache()
-        val entry = (cen, in, nd, gb,
-          Seq(praw, ipre, ib, gq, cpre, in, cen, nd, gb))
-        // Dev attribution only (GRAFT_REF_TIMING): force each cached side
-        // in dependency order and print its marginal build time.
-        if (sys.env.contains("GRAFT_REF_TIMING")) {
-          def force(label: String, df: DataFrame): Unit = {
-            val t0 = System.nanoTime()
-            df.count()
-            System.err.println(
-              f"SIDES $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-          force("praw", praw); force("cpre", cpre); force("in", in)
-          force("cen", cen); force("nd", nd); force("gb", gb)
-        }
-        sideFrames.put(key, entry)
-        entry
-      })
-      (c, i, nd0, gb0)
-    }
+  private val sides = Memo[Sides]("linkage_sides", _.owned) { (s, d) =>
+    GraftFunctions.register(s)
+    // The pre-frames are cached BEFORE derive(): without the barrier,
+    // ProjectionCollapse inlines the noise-class CASE/regex trees into
+    // every phonetic/prefix column (~8 copies per name), and the
+    // resulting mega-expression dominates the derivation cost. The
+    // oracle mirrors this with its MATERIALIZED input_pre/census_pre
+    // CTEs; at 100 TB these would be persisted intermediate tables.
+    // flaggedPersons is cached FIRST so each heavyweight projection
+    // (inputPre's class CASEs, censusPre's stale switches, derive's
+    // phonetics) compiles as its own stage directly over a scan — the
+    // shape whole-stage codegen can method-split (see flaggedPersons).
+    // It is also FANNED OUT to the session parallelism: the local
+    // bench parquet arrives as 1-2 scan partitions (file < split
+    // size), which would run every downstream phonetic/noise
+    // projection single-threaded; a cluster scan splits naturally.
+    val praw = flaggedPersons(s, d)
+      .repartition(s.sessionState.conf.numShufflePartitions).cache()
+    val ipre = inputPre(praw).cache()
+    val ib = derive(ipre).cache()
+    // GQ detection runs on the PRE-expansion frame (one row per input
+    // record — alternate rows must not double-count people at a geokey).
+    val gq = probableGq(ib).cache()
+    // Nickname expansion (reference "Pre-processing": nickname
+    // standardization adds alternate-name rows): every record whose
+    // first name appears as a nickname gains an extra row carrying the
+    // canonical name, with the first-name-derived keys RECOMPUTED from
+    // it. Address-derived columns are reused — the expensive
+    // standardization/geokey work runs once per record, not per
+    // variant. The nickname table is broadcast (tiny dim).
+    val nickDim = broadcast(
+      s.createDataFrame(Preprocess.nicknames).toDF("canonical", "nickname"))
+    val alt = deriveFirst(
+      ib.join(nickDim, ib("first_name") === nickDim("nickname"))
+        .drop("first_name", "nickname")
+        .withColumnRenamed("canonical", "first_name"))
+      .select(ib.columns.map(col): _*)
+    val ibx = ib.unionByName(alt)
+    val cpre = censusPre(praw).cache()
+    val in = finish(ibx, gq, "rec_id").cache()
+    val cen = finish(derive(cpre), gq, "pik").cache()
+    // The two sides derive from independent cached subtrees (census from
+    // cpre, input from ib/gq); force them concurrently.
+    forcePar(Seq(cen, in))
+    Sides(cen, in, cpre, Seq(praw, ipre, ib, gq, cpre, in, cen))
+  }
 
-  def input(s: SparkSession, d: String): DataFrame = sides(s, d)._2
+  /** The Name/DOB Reference File and GeoBase frames, cached. */
+  private val refFiles = Memo[(DataFrame, DataFrame)]("linkage_reffiles",
+      r => Seq(r._1, r._2)) { (s, d) =>
+    val Sides(cen, _, cpre, _) = sides(s, d)
+    // ---- per-module reference files (the PVS searches FILES, not the
+    // raw census: 03_link_datasets.ipynb NameSearch header, 02 cells
+    // 62/66/70/84). A census-side numident holds an era-0 clean filing
+    // per covered pik plus era-1 refiles: the k%21 subset under the
+    // MARRIED surname, the k%6 subset with an alternate DOB day. The
+    // same Lineage operators that build q72's file dedupe the
+    // alternates and cross name × DOB per pik ("all possible
+    // combinations of alternate names and dates of birth"); name keys
+    // re-derive on the combined rows like the input side's nickname
+    // alternates.
+    val n0 = cpre.select(
+      concat(lit("cn0_"), col("pik")).as("record_id"), col("pik").as("ssn"),
+      col("first_name"), col("last_name"), col("middle_initial"),
+      col("dob_year"), col("dob_month"), col("dob_day"))
+    val n1 = cpre
+      .filter(pmod(col("pik"), lit(21)) === 0 || pmod(col("pik"), lit(6)) === 0)
+      .select(
+        concat(lit("cn1_"), col("pik")).as("record_id"), col("pik").as("ssn"),
+        col("first_name"),
+        when(pmod(col("pik"), lit(21)) === 0, People.marriedLast(col("pik")))
+          .otherwise(col("last_name")).as("last_name"),
+        col("middle_initial"), col("dob_year"), col("dob_month"),
+        when(pmod(col("pik"), lit(6)) === 0, pmod(col("dob_day"), lit(28)) + 1)
+          .otherwise(col("dob_day")).cast("int").as("dob_day"))
+    val cnum = n0.unionByName(n1)
+    val (altN, pN) = Lineage.dedupeRawPreservingSourceRecords(
+      cnum.select("record_id", "ssn", "first_name", "last_name", "middle_initial"),
+      Seq("ssn", "first_name", "last_name", "middle_initial"), "can")
+    val (altD, pD) = Lineage.dedupeRawPreservingSourceRecords(
+      cnum.select("record_id", "ssn", "dob_year", "dob_month", "dob_day"),
+      Seq("ssn", "dob_year", "dob_month", "dob_day"), "cad")
+    val (ndrRaw, _) = Lineage.mergePreservingSourceRecords(
+      altN, pN, altD, pD, Seq("ssn"), "cndr")
+    val nd = deriveNames(ndrRaw.select(
+      col("ssn").as("pik"), col("first_name"), col("last_name"),
+      col("middle_initial"), col("dob_year"), col("dob_month"), col("dob_day")))
+      .cache()
+    // GeoBase = the name/DOB file with each pik's (possibly stale)
+    // census address keys appended (02 cell 84); the GQ null-out rides
+    // in via cen's *_blk columns.
+    val gb = nd.join(
+      cen.select("pik", "zip3", "geokey", "geokey_blk", "street_num_blk",
+        "sdx_street_blk"),
+      Seq("pik")).cache()
+    forcePar(Seq(nd, gb))
+    (nd, gb)
+  }
 
-  def census(s: SparkSession, d: String): DataFrame = sides(s, d)._1
+  def input(s: SparkSession, d: String): DataFrame = sides(s, d).input
+
+  def census(s: SparkSession, d: String): DataFrame = sides(s, d).census
 
   /** The Name/DOB Reference File frame the namesearch/dobsearch modules
     * search (alternate name × DOB rows per pik, name keys derived).
     */
-  def namedob(s: SparkSession, d: String): DataFrame = sides(s, d)._3
+  def namedob(s: SparkSession, d: String): DataFrame = refFiles(s, d)._1
 
   /** The GeoBase frame the geosearch module searches (name/DOB rows +
     * address keys).
     */
-  def geobase(s: SparkSession, d: String): DataFrame = sides(s, d)._4
+  def geobase(s: SparkSession, d: String): DataFrame = refFiles(s, d)._2
 
   /** The per-module reference frames [[LinkageCascade.run]] searches. */
   def cascadeRefs(s: SparkSession, d: String): Map[String, DataFrame] = {
-    val (c, _, nd, gb) = sides(s, d)
-    Map("census" -> c, "namedob" -> nd, "geobase" -> gb)
+    val (nd, gb) = refFiles(s, d)
+    Map("census" -> census(s, d), "namedob" -> nd, "geobase" -> gb)
   }
-
-  /** Forces the memoized side frames into the cache (Bench warmup): the
-    * one-time derivation cost stops landing on whichever linkage query
-    * happens to run first.
-    */
-  def warm(s: SparkSession, d: String): Unit =
-    warmSteps.foreach { case (_, f) => f(s, d) }
 
   /** Force a set of independent cached frames concurrently (one count
     * job each, submitted from futures so the jobs overlap).
@@ -806,33 +787,6 @@ object LinkageQueries {
       scala.concurrent.Future.sequence(dfs.map(df => Future(df.count()))),
       Duration.Inf); ()
   }
-
-  /** The memo builds behind [[warm]], individually named so Bench can
-    * attribute warm-time growth to the memo that grew (the
-    * `warm_breakdown` map in the bench JSON).
-    */
-  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "linkage_sides" -> ((s: SparkSession, d: String) => {
-      GraftFunctions.register(s)
-      // The two sides derive from independent cached subtrees (census from
-      // cpre, input from ib/gq); force them concurrently — this step heads
-      // the warm DAG's critical path (guide §2.6).
-      val c = census(s, d); val i = input(s, d)
-      forcePar(Seq(c, i)); ()
-    }),
-    "linkage_reffiles" -> ((s: SparkSession, d: String) => {
-      val nd = namedob(s, d); val gb = geobase(s, d)
-      forcePar(Seq(nd, gb)); ()
-    }),
-    "linkage_scored_block" -> ((s: SparkSession, d: String) => {
-      scoredBlock(s, d).count(); ()
-    }),
-    "linkage_cost_summary" -> ((s: SparkSession, d: String) => {
-      costSummary(s, d).count(); ()
-    }),
-    "cascade_links" -> ((s: SparkSession, d: String) => {
-      cascadeLinks(s, d).count(); ()
-    }))
 
   // ---- SQL mirrors of the sides ------------------------------------------
 
@@ -1585,31 +1539,20 @@ object LinkageQueries {
   /** q32/q33/q36/q37 all need the full cascade; its per-pass links are
     * already localCheckpointed, so memoizing the assembled frame per
     * (session, dir) means every consumer reuses the materialized links
-    * instead of re-running the predict passes. Only the LATEST key is kept:
-    * switching dir/session evicts the previous frame so checkpointed
-    * blocks and session references don't accumulate for process lifetime.
+    * instead of re-running the predict passes.
     */
-  private val cascadeFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def cascadeLinks(s: SparkSession, d: String): DataFrame =
-    cascadeFrames.synchronized {
-      val key = (s, d)
-      cascadeFrames.getOrElse(key, {
-        cascadeFrames.clear()
-        // Checkpoint the ASSEMBLED link set once: with the overlapped
-        // cascade, per-pass links are checkpointed but the within-group
-        // anti-join resolution on top of them is lazy, and every memo
-        // consumer (q32/q33/q36/q37/q39/q83/q84/q112…) re-executed those
-        // ~13 small joins per query (measured +0.3-0.4 s each). One
-        // KB-scale materialization here gives consumers a single
-        // LogicalRDD, like the pre-overlap shape.
-        val df = LinkageCascade.run(cascadeRefs(s, d), input(s, d), config)
-          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-        cascadeFrames.put(key, df)
-        df
-      })
-    }
+  private val cascadeLinks = Memo.frame("cascade_links") { (s, d) =>
+    // Checkpoint the ASSEMBLED link set once: with the overlapped
+    // cascade, per-pass links are checkpointed but the within-group
+    // anti-join resolution on top of them is lazy, and every memo
+    // consumer (q32/q33/q36/q37/q39/q83/q84/q112…) re-executed those
+    // ~13 small joins per query (measured +0.3-0.4 s each). One
+    // KB-scale materialization here gives consumers a single
+    // LogicalRDD, like the pre-overlap shape. The default storage level
+    // spills to disk: lineage is cut, so a block evicted from memory
+    // would otherwise fail every consumer.
+    LinkageCascade.run(cascadeRefs(s, d), input(s, d), config).localCheckpoint()
+  }
 
   private val countInputSql = "(SELECT CAST(COUNT(*) AS DOUBLE) FROM input)"
   private val countCensusSql = "(SELECT CAST(COUNT(*) AS DOUBLE) FROM census)"
@@ -1618,50 +1561,40 @@ object LinkageQueries {
     * the blocked+scored frame is built once, projected narrow (ids, gamma
     * ints, weight) and cached — each consumer is then a projection or a
     * filter+window over the cached frame instead of a fresh join + JW
-    * evaluation. Same latest-key-only eviction as [[cascadeFrames]].
+    * evaluation.
     */
-  private val scoredFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val scoredBlock = Memo.frame("linkage_scored_block") { (s, d) =>
+    // tf_ln12 rides along for q92: the TERM the pair agreed on must be
+    // the pairing row's own ln12 (nickname expansion makes rec_id
+    // non-unique in input, so a later re-join on rec_id would fan out).
+    LinkageCascade
+      .score(LinkageCascade.pairs(census(s, d), input(s, d), blockPass), config)
+      .select(col("l_pik").as("pik") +: col("r_rec_id").as("rec_id") +:
+        col("r_ln12").as("tf_ln12") +:
+        comparisons.map(c => col(c.gammaName)) :+ col("match_weight"): _*)
+      .cache()
+  }
 
   // q78 and q108 both price every pass's blocks; the 13-row summary is
   // memoized like the other shared frames (cache holds the materialized
   // rows, not a plan — blockCostSummaryAll's two explode-aggregates are
   // the cost).
-  private val costFrames = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private def costSummary(s: SparkSession, d: String): DataFrame =
-    costFrames.synchronized {
-      costFrames.getOrElse((s, d), {
-        costFrames.values.foreach(_.unpersist())
-        costFrames.clear()
-        val df = LinkageCascade
-          .blockCostSummaryAll(cascadeRefs(s, d), input(s, d), passes).cache()
-        costFrames.put((s, d), df)
-        df
-      })
-    }
-
-  private def scoredBlock(s: SparkSession, d: String): DataFrame =
-    scoredFrames.synchronized {
-      val key = (s, d)
-      scoredFrames.getOrElse(key, {
-        scoredFrames.clear()
-        // tf_ln12 rides along for q92: the TERM the pair agreed on must be
-        // the pairing row's own ln12 (nickname expansion makes rec_id
-        // non-unique in input, so a later re-join on rec_id would fan out).
-        val df = LinkageCascade
-          .score(LinkageCascade.pairs(census(s, d), input(s, d), blockPass), config)
-          .select(col("l_pik").as("pik") +: col("r_rec_id").as("rec_id") +:
-            col("r_ln12").as("tf_ln12") +:
-            comparisons.map(c => col(c.gammaName)) :+ col("match_weight"): _*)
-          .cache()
-        scoredFrames.put(key, df)
-        df
-      })
-    }
+  private val costSummary = Memo.frame("linkage_cost_summary") { (s, d) =>
+    LinkageCascade.blockCostSummaryAll(cascadeRefs(s, d), input(s, d), passes).cache()
+  }
 
   // ---- model / pass diagnostics (the splink_reports surface) -------------
+
+  /** DuckDB's `round(DOUBLE, 6)`: half away from zero on the binary
+    * product x·1e6, then divided back. Rounding the decimal rendering of x
+    * instead disagrees on ties such as 0.41478349999999997 (the midpoint
+    * of 0.414782 and 0.414785), whose product is exactly 414783.5.
+    */
+  private[graft] def roundDouble6(x: Double): Double = {
+    val v = math.abs(x * 1e6)
+    val f = math.floor(v)
+    math.copySign(if (v - f >= 0.5) f + 1 else f, x) / 1e6
+  }
 
   private def r12(x: Double): Double =
     BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -1949,13 +1882,11 @@ object LinkageQueries {
           census(s, d), input(s, d), emPasses(0), config, 3, Some(scoredBlock(s, d))))
         val m2 = fin(LinkageCascade.emHistory(
           census(s, d), input(s, d), emPasses(1), config, 3, None))
-        def q6(x: Double): Double =
-          BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         val rows = comparisons.flatMap(c => c.params.map { case (g, _, _) =>
           val a = m1.get((c.name, g))
           val b = m2.get((c.name, g))
           val comb = (a, b) match {
-            case (Some(x), Some(y)) => q6((x + y) / 2)
+            case (Some(x), Some(y)) => roundDouble6((x + y) / 2)
             case (Some(x), None)    => x
             case (None, Some(y))    => y
             case _ => throw new IllegalStateException(s"no session estimates ${c.name}")

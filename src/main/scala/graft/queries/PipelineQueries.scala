@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import graft.operators.{Multimodal, TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -275,20 +275,11 @@ object PipelineQueries {
     * using [[bm25DocTf]] directly (per-batch postings are not corpus
     * state).
     */
-  private val bm25Frames = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  private[graft] def bm25Postings(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    bm25Frames.synchronized {
-      bm25Frames.getOrElse((s, d), {
-        bm25Frames.values.foreach { case (a, b) => a.unpersist(); b.unpersist() }
-        bm25Frames.clear()
-        val (tf, dl) = bm25DocTf(Tables.documents(s, d))
-        val pair = (tf.cache(), dl.cache())
-        bm25Frames.put((s, d), pair)
-        pair
-      })
-    }
+  private[graft] val bm25Postings = Memo[(DataFrame, DataFrame)]("bm25_postings",
+      p => Seq(p._1, p._2)) { (s, d) =>
+    val (tf, dl) = bm25DocTf(Tables.documents(s, d))
+    (Memo.materialize(tf.cache()), Memo.materialize(dl.cache()))
+  }
 
   /** Fit the BM25 corpus artifacts: the (query_id, word, df) standing
     * query set (fixture: df ranks 17-32 paired into 8 two-term queries —
@@ -692,9 +683,6 @@ object PipelineQueries {
     * work; localCheckpoint'd because the candidate self-join reads the
     * frame on both sides plus the hub aggregate.
     */
-  private val imageSigFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The memoized (doc_id, sig, res) frame — res = width·height rides the
     * SAME decode pass that produces the signature (the dims are record
     * fields, free once the record is in hand), so q156's keep policy
@@ -702,19 +690,13 @@ object PipelineQueries {
     * media-record construction (a second full decode/encode pass over
     * the corpus before this column existed).
     */
-  private[graft] def imageDhashSigRes(s: SparkSession, d: String): DataFrame =
-    imageSigFrames.synchronized {
-      imageSigFrames.getOrElse((s, d), {
-        imageSigFrames.clear()
-        val df = dhashSigResOf(
-          imageRecordsWithDups(s, d)
-            .repartition(s.sessionState.conf.numShufflePartitions,
-              col("doc_id")))
-          .localCheckpoint()
-        imageSigFrames.put((s, d), df)
-        df
-      })
-    }
+  private[graft] val imageDhashSigRes = Memo.frame("image_sigs") { (s, d) =>
+    dhashSigResOf(
+      imageRecordsWithDups(s, d)
+        .repartition(s.sessionState.conf.numShufflePartitions,
+          col("doc_id")))
+      .localCheckpoint()
+  }
 
   private[graft] def imageDhashSigs(s: SparkSession, d: String): DataFrame =
     imageDhashSigRes(s, d).select("doc_id", "sig")
@@ -727,19 +709,9 @@ object PipelineQueries {
     * survives the JVM); its build cost is the `image_class_pairs` warm
     * step, visible in warm_breakdown and in the bench's value_with_warm.
     */
-  private val classPairFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def imageClassPairs(s: SparkSession, d: String): DataFrame =
-    classPairFrames.synchronized {
-      classPairFrames.getOrElse((s, d), {
-        classPairFrames.values.foreach(_.unpersist())
-        classPairFrames.clear()
-        val df = hammingClassPairs(imageDhashSigs(s, d)).cache()
-        classPairFrames.put((s, d), df)
-        df
-      })
-    }
+  private[graft] val imageClassPairs = Memo.frame("image_class_pairs") { (s, d) =>
+    hammingClassPairs(imageDhashSigs(s, d)).cache()
+  }
 
   /** The shared decode→resample→dHash kernel over a media-record frame —
     * ONE home for the signature arithmetic so the batch corpus build
@@ -1304,19 +1276,9 @@ object PipelineQueries {
   // policy consumes it as its edge set — without the memo q124 re-runs
   // the whole candidate + verify pipeline (measured 32 s at the 10×
   // point, exponent 1.09, vs CC-only cost once shared).
-  private val embPairFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def embDedupPairs(s: SparkSession, d: String): DataFrame =
-    embPairFrames.synchronized {
-      embPairFrames.getOrElse((s, d), {
-        embPairFrames.values.foreach(_.unpersist())
-        embPairFrames.clear()
-        val df = embDedupPairsBuild(s, d).cache()
-        embPairFrames.put((s, d), df)
-        df
-      })
-    }
+  private val embDedupPairs = Memo.frame("emb_pairs") { (s, d) =>
+    embDedupPairsBuild(s, d).cache()
+  }
 
   /** ONE flat ranked-assignment pass over the dup corpus — (vec_id,
     * label, cid, csim, arnk, probes), arnk <= derived probes — shared by
@@ -1332,33 +1294,23 @@ object PipelineQueries {
     * all three projections are value-identical to their previous
     * stand-alone passes. Slim rows only; payloads re-join by id.
     */
-  private val dupRankedFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def embDupRankedFlat(s: SparkSession, d: String): DataFrame =
-    dupRankedFrames.synchronized {
-      dupRankedFrames.getOrElse((s, d), {
-        dupRankedFrames.values.foreach(_.unpersist())
-        dupRankedFrames.clear()
-        graft.functions.GraftFunctions.register(s)
-        val e = embDupNorms(s, d)
-        val cents = ivfCentroids(e)
-        val byVec = Window.partitionBy("vec_id")
-          .orderBy(col("csim").desc, col("cid").asc)
-        val df = e.select("vec_id", "label", "embedding", "nrm")
-          .crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("label"),
-            (VectorOps.dotDecimal(col("embedding"), col("ce")) /
-              (col("nrm") * col("cn"))).as("csim"),
-            col("cid"))
-          .withColumn("arnk", row_number().over(byVec))
-          .crossJoin(broadcast(derivedProbes(cents)))
-          .filter(col("arnk") <= col("probes"))
-          .cache()
-        dupRankedFrames.put((s, d), df)
-        df
-      })
-    }
+  private val embDupRankedFlat = Memo.frame("emb_ranked_dup") { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    val e = embDupNorms(s, d)
+    val cents = ivfCentroids(e)
+    val byVec = Window.partitionBy("vec_id")
+      .orderBy(col("csim").desc, col("cid").asc)
+    e.select("vec_id", "label", "embedding", "nrm")
+      .crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("label"),
+        (VectorOps.dotDecimal(col("embedding"), col("ce")) /
+          (col("nrm") * col("cn"))).as("csim"),
+        col("cid"))
+      .withColumn("arnk", row_number().over(byVec))
+      .crossJoin(broadcast(derivedProbes(cents)))
+      .filter(col("arnk") <= col("probes"))
+      .cache()
+  }
 
   private def embDedupPairsBuild(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -1387,25 +1339,15 @@ object PipelineQueries {
     * says is amortized. Memoized per (session, dir) behind the
     * emb_corpus_cells warm step.
     */
-  private val corpusCellFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def corpusCellIndex(s: SparkSession, d: String): DataFrame =
-    corpusCellFrames.synchronized {
-      corpusCellFrames.getOrElse((s, d), {
-        corpusCellFrames.values.foreach(_.unpersist())
-        corpusCellFrames.clear()
-        // Probe-1 home cells of the corpus slice, read off the shared
-        // ranked pass ([[embDupRankedFlat]]) instead of a third n×k
-        // scoring run; per-vector ranking commutes with the id filter.
-        val df = embDupRankedFlat(s, d)
-          .filter(col("vec_id") < 100000 && col("arnk") === 1)
-          .select(col("vec_id").as("corpus_id"), col("label"), col("cid"))
-          .cache()
-        corpusCellFrames.put((s, d), df)
-        df
-      })
-    }
+  private val corpusCellIndex = Memo.frame("emb_corpus_cells") { (s, d) =>
+    // Probe-1 home cells of the corpus slice, read off the shared
+    // ranked pass ([[embDupRankedFlat]]) instead of a third n×k
+    // scoring run; per-vector ranking commutes with the id filter.
+    embDupRankedFlat(s, d)
+      .filter(col("vec_id") < 100000 && col("arnk") === 1)
+      .select(col("vec_id").as("corpus_id"), col("label"), col("cid"))
+      .cache()
+  }
 
   /** Each vector's cosine to its ASSIGNED (top-1) centroid — SemDeDup's
     * keep criterion (the member closest to the cluster centroid is the
@@ -1413,25 +1355,15 @@ object PipelineQueries {
     */
   // Memoized: the affinity pass is its own n×k decimal assignment — q124
   // must not pay it per invocation on top of the pair memo.
-  private val embAffFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def embAffinity(s: SparkSession, d: String): DataFrame =
-    embAffFrames.synchronized {
-      embAffFrames.getOrElse((s, d), {
-        embAffFrames.values.foreach(_.unpersist())
-        embAffFrames.clear()
-        // Top-1 csim read off the shared ranked pass ([[embDupRankedFlat]],
-        // arnk = 1 ⊆ arnk <= probes) — this was a SECOND full n×k decimal
-        // scoring over the identical frame and centroid set.
-        val df = embDupRankedFlat(s, d)
-          .filter(col("arnk") === 1)
-          .select(col("vec_id").as("node"), col("csim").cast("double").as("aff"))
-          .cache()
-        embAffFrames.put((s, d), df)
-        df
-      })
-    }
+  private val embAffinity = Memo.frame("emb_affinity") { (s, d) =>
+    // Top-1 csim read off the shared ranked pass ([[embDupRankedFlat]],
+    // arnk = 1 ⊆ arnk <= probes) — this was a SECOND full n×k decimal
+    // scoring over the identical frame and centroid set.
+    embDupRankedFlat(s, d)
+      .filter(col("arnk") === 1)
+      .select(col("vec_id").as("node"), col("csim").cast("double").as("aff"))
+      .cache()
+  }
 
   /** CTE chain ending in `epairs(vec_a, vec_b, cos)` ≡ [[embDedupPairs]]
     * (also leaves nrms/csims in scope for q124's affinity CTE).
@@ -1492,44 +1424,23 @@ object PipelineQueries {
 
   /** Normalized embeddings, cached per (session, dir): q44, q68 and both
     * branches of q89 all start from this frame — one scan + one decimal
-    * norm pass instead of four. Latest-key-only eviction like the gram
-    * memo. Carries `label` so the filtered-search query (q132) can key
-    * its candidate join on it; every other consumer selects its columns
-    * explicitly and ignores it.
+    * norm pass instead of four. Carries `label` so the filtered-search
+    * query (q132) can key its candidate join on it; every other consumer
+    * selects its columns explicitly and ignores it.
     */
-  private val normFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def embNorms(s: SparkSession, d: String): DataFrame =
-    normFrames.synchronized {
-      normFrames.getOrElse((s, d), {
-        normFrames.values.foreach(_.unpersist())
-        normFrames.clear()
-        val df = sparkNorm(fanOut(Tables.embeddings(s, d)
-          .select("vec_id", "embedding", "label"))).cache()
-        normFrames.put((s, d), df)
-        df
-      })
-    }
+  private val embNorms = Memo.frame("emb_norms") { (s, d) =>
+    sparkNorm(fanOut(Tables.embeddings(s, d)
+      .select("vec_id", "embedding", "label"))).cache()
+  }
 
   /** embWithDups + decimal norm, cached: q45 and q51 both consume the
     * dup-planted frame several times per run (band/bucket build + both
     * verify sides), and the decimal norm is the dominant scalar.
     */
-  private val dupNormFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def embDupNorms(s: SparkSession, d: String): DataFrame =
-    dupNormFrames.synchronized {
-      dupNormFrames.getOrElse((s, d), {
-        dupNormFrames.values.foreach(_.unpersist())
-        dupNormFrames.clear()
-        graft.functions.GraftFunctions.register(s)
-        val df = sparkNorm(fanOut(embWithDups(s, d))).cache()
-        dupNormFrames.put((s, d), df)
-        df
-      })
-    }
+  private val embDupNorms = Memo.frame("emb_dup_norms") { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    sparkNorm(fanOut(embWithDups(s, d))).cache()
+  }
 
   /** q44's exact brute-force top-5 (qid, vec_id, rnk, cos) — also the
     * truth set the ANN recall eval (q89) measures q68 against. Top-k via
@@ -1538,33 +1449,23 @@ object PipelineQueries {
     */
   // Memoized like the assignment frame: q44 and q89's truth side run the
   // same broadcast-query decimal scoring pass.
-  private val bruteFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def bruteTop5(s: SparkSession, d: String): DataFrame =
-    bruteFrames.synchronized {
-      bruteFrames.getOrElse((s, d), {
-        bruteFrames.values.foreach(_.unpersist())
-        bruteFrames.clear()
-        graft.functions.GraftFunctions.register(s)
-        val e = embNorms(s, d)
-        val q = e.filter(col("vec_id").isin(KnnQueryIds: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-        val df = e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("cos",
-            VectorOps.dotDecimal(col("embedding"), col("qe")) / (col("nrm") * col("qn")))
-          .groupBy("qid")
-          .agg(graft.functions.GraftFunctions
-            .topKByScore(col("cos"), col("vec_id"), 5).as("top"))
-          .select(col("qid"), posexplode(col("top")))
-          .select(col("qid"), col("col.id").as("vec_id"),
-            (col("pos") + 1).as("rnk"), round(col("col.score"), 6).as("cos"))
-          .cache()
-        bruteFrames.put((s, d), df)
-        df
-      })
-    }
+  private val bruteTop5 = Memo.frame("brute_knn") { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    val e = embNorms(s, d)
+    val q = e.filter(col("vec_id").isin(KnnQueryIds: _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
+    e.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos",
+        VectorOps.dotDecimal(col("embedding"), col("qe")) / (col("nrm") * col("qn")))
+      .groupBy("qid")
+      .agg(graft.functions.GraftFunctions
+        .topKByScore(col("cos"), col("vec_id"), 5).as("top"))
+      .select(col("qid"), posexplode(col("top")))
+      .select(col("qid"), col("col.id").as("vec_id"),
+        (col("pos") + 1).as("rnk"), round(col("col.score"), 6).as("cos"))
+      .cache()
+  }
 
   /** SQL tail for bruteTop5 (CTE names bq/bdots/truth; expects a `nrms`
     * CTE from normsCte in scope). Shared by q44 and q89.
@@ -1612,26 +1513,16 @@ object PipelineQueries {
   // assignment, and the assignment scoring (flat: vectors × k × Dim
   // decimal ops; ladder: vectors × (kc + cp·k/kc) × Dim) is the
   // dominant cost — pay it once per (session, dir).
-  private val assignFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def ivfAssign(s: SparkSession, d: String): DataFrame =
-    assignFrames.synchronized {
-      assignFrames.getOrElse((s, d), {
-        assignFrames.values.foreach(_.unpersist())
-        assignFrames.clear()
-        graft.functions.GraftFunctions.register(s)
-        val e = embNorms(s, d)
-        val cents = ivfCentroids(e)
-        // Probe rows re-join their embedding by id AFTER ranking
-        // (n×probes rows) — both arms rank slim rows only.
-        val df = productionAssignmentsRanked(e, cents)
-          .join(e, Seq("vec_id"))
-          .cache()
-        assignFrames.put((s, d), df)
-        df
-      })
-    }
+  private val ivfAssign = Memo.frame("ivf_assign") { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    val e = embNorms(s, d)
+    val cents = ivfCentroids(e)
+    // Probe rows re-join their embedding by id AFTER ranking
+    // (n×probes rows) — both arms rank slim rows only.
+    productionAssignmentsRanked(e, cents)
+      .join(e, Seq("vec_id"))
+      .cache()
+  }
 
   private def ivfTop5(s: SparkSession, d: String): DataFrame = {
     val assign = ivfAssign(s, d)
@@ -2144,86 +2035,6 @@ object PipelineQueries {
       .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
         round(col("logw").cast("double"), 6).as("logw"))
 
-  /** Verified near-dup pairs (doc_a, doc_b, jaccard >= 0.5) — q43's body,
-    * shared with q52's clustering. Length-banded candidate join: the
-    * |n_chars diff| <= 20 predicate confines a match to the same or an
-    * adjacent 32-char bucket, so emitting the right side under its 3
-    * candidate buckets makes this a pure equi-join on (source, bucket) —
-    * linear in block size instead of quadratic per source, with an
-    * IDENTICAL result set (each qualifying pair matches exactly one key).
-    */
-  // q43 and q52 both consume jaccardPairs; memoizing the cached gram frame
-  // per (session, dir) means one .cache() call instead of two logically
-  // identical ones (the second triggers "already cached" warnings and a
-  // redundant CacheManager lookup).
-  private val gramFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Forces the memoized gram frame into the cache (Bench warmup) so its
-    * one-time build cost stops landing on q43's measurement.
-    */
-  def warm(s: SparkSession, d: String): Unit =
-    warmSteps.foreach { case (_, f) => f(s, d) }
-
-  /** The memo builds behind [[warm]], individually named so Bench can
-    * attribute warm-time growth (`warm_breakdown`).
-    */
-  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "grams" -> ((s: SparkSession, d: String) => {
-      jaccardPairs(s, d)
-      gramFrames.get((s, d)).foreach(_.count()); ()
-    }),
-    "jaccard_banded" -> ((s: SparkSession, d: String) => {
-      bandedJaccardPairs(s, d).count(); ()
-    }),
-    "emb_norms" -> ((s: SparkSession, d: String) => { embNorms(s, d).count(); () }),
-    "emb_dup_norms" -> ((s: SparkSession, d: String) => { embDupNorms(s, d).count(); () }),
-    "minhash_bands" -> ((s: SparkSession, d: String) => { lshBandRows(s, d).count(); () }),
-    "shingles" -> ((s: SparkSession, d: String) => { plantedShingles(s, d).count(); () }),
-    "ivf_assign" -> ((s: SparkSession, d: String) => { ivfAssign(s, d).count(); () }),
-    "brute_knn" -> ((s: SparkSession, d: String) => { bruteTop5(s, d).count(); () }),
-    // The shared flat ranked-assignment pass (vec × centroid decimal
-    // scoring, arnk <= derived probes) behind the dedup candidates, the
-    // SemDeDup affinity and the incremental corpus index — ONE n×k pass
-    // where those three each ran their own before round 19.
-    "emb_ranked_dup" -> ((s: SparkSession, d: String) => {
-      embDupRankedFlat(s, d).count(); ()
-    }),
-    "emb_pairs" -> ((s: SparkSession, d: String) => {
-      embDedupPairs(s, d).count(); embAffinity(s, d).count(); ()
-    }),
-    "emb_corpus_cells" -> ((s: SparkSession, d: String) => {
-      corpusCellIndex(s, d).count(); ()
-    }),
-    // The image signature frame (decode → resample → dHash over every
-    // media record) feeds q155/q156/q157 and the scale audits; building
-    // it once here keeps the codec pass off whichever consumer runs
-    // first.
-    "image_sigs" -> ((s: SparkSession, d: String) => {
-      imageDhashSigs(s, d).count(); ()
-    }),
-    // The image near-dup edge set (class stars + rep pairs) shared by
-    // q155 (reports it) and q156 (clusters over it).
-    "image_class_pairs" -> ((s: SparkSession, d: String) => {
-      imageClassPairs(s, d).count(); ()
-    }),
-    // The PQ index (codebook + per-vector codes) feeds q149/q152; the
-    // n·M·K decimal encode is the dominant PQ cost and builds once here.
-    "pq_codes" -> ((s: SparkSession, d: String) => {
-      val (cb, codes) = pqIndex(s, d); cb.count(); codes.count(); ()
-    }),
-    // The BM25 postings (tf, dl) feed q147/q150.
-    "bm25_postings" -> ((s: SparkSession, d: String) => {
-      val (tf, dl) = bm25Postings(s, d); tf.count(); dl.count(); ()
-    }),
-    // The BPE merge list feeds q135/q82/q59; training it in the warm
-    // phase keeps its 16-iteration loop off whichever consumer runs
-    // first (the cross-query memo accounting rule every other memo here
-    // follows).
-    "bpe_merges" -> ((s: SparkSession, d: String) => {
-      graft.operators.Bpe.mergesFor(s, d); ()
-    }))
-
   /** The decontamination family's shared input: the planted-passage corpus
     * exploded to (doc_id, is_bench, n_shingles, shingle) — shingle NULL for
     * docs shorter than the 5-gram window (explode_outer keeps them). The
@@ -2231,31 +2042,21 @@ object PipelineQueries {
     * dominant scalar in q56/q104, so it is memoized like the gram and band
     * frames and both consumers read the cached frame.
     */
-  private val plantedFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   val PlantedPassage = " shared benchmark passage alpha beta gamma delta epsilon zeta"
 
-  def plantedShingles(s: SparkSession, d: String): DataFrame =
-    plantedFrames.synchronized {
-      plantedFrames.getOrElse((s, d), {
-        plantedFrames.values.foreach(_.unpersist())
-        plantedFrames.clear()
-        val isBench = pmod(col("doc_id"), lit(97)) === 0
-        val planted = concat(col("text"),
-          when(isBench || pmod(col("doc_id"), lit(13)) === 0, lit(PlantedPassage))
-            .otherwise(lit("")))
-        val df = fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), isBench.as("is_bench"),
-            TextOps.wordShingles(planted, 5).as("grams"))
-          .select(col("doc_id"), col("is_bench"),
-            size(col("grams")).cast("long").as("n_shingles"),
-            explode_outer(col("grams")).as("shingle"))
-          .cache()
-        plantedFrames.put((s, d), df)
-        df
-      })
-    }
+  val plantedShingles = Memo.frame("shingles") { (s, d) =>
+    val isBench = pmod(col("doc_id"), lit(97)) === 0
+    val planted = concat(col("text"),
+      when(isBench || pmod(col("doc_id"), lit(13)) === 0, lit(PlantedPassage))
+        .otherwise(lit("")))
+    fanOut(Tables.documents(s, d))
+      .select(col("doc_id"), isBench.as("is_bench"),
+        TextOps.wordShingles(planted, 5).as("grams"))
+      .select(col("doc_id"), col("is_bench"),
+        size(col("grams")).cast("long").as("n_shingles"),
+        explode_outer(col("grams")).as("shingle"))
+      .cache()
+  }
 
   /** q41's MinHash-LSH candidate pairs (doc_a, doc_b) — also the
     * approximate side of the q99 recall eval and the signature store the
@@ -2300,20 +2101,10 @@ object PipelineQueries {
   // md5 per shingle) runs once per (session, dir), not once per consumer.
   // The streaming path (StreamingDedup) calls bandRowsFor directly on its
   // per-batch arrivals and never touches this cache.
-  private val bandFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def lshBandRows(s: SparkSession, d: String): DataFrame =
-    bandFrames.synchronized {
-      bandFrames.getOrElse((s, d), {
-        bandFrames.values.foreach(_.unpersist())
-        bandFrames.clear()
-        val df = bandRowsFor(fanOut(docsWithDups(s, d)
-          .select("doc_id", "text"))).cache()
-        bandFrames.put((s, d), df)
-        df
-      })
-    }
+  private val lshBandRows = Memo.frame("minhash_bands") { (s, d) =>
+    bandRowsFor(fanOut(docsWithDups(s, d)
+      .select("doc_id", "text"))).cache()
+  }
 
   /** CTE chain ending in `bands(doc_id, band, v1, v2)` ≡ [[lshBandRows]]
     * (expects docs2 in scope). Generated from the SAME minhashParams, so
@@ -2355,40 +2146,31 @@ object PipelineQueries {
       .distinct()
   }
 
+  /** Verified near-dup pairs (doc_a, doc_b, jaccard >= 0.5) — q43's body,
+    * shared with q52's clustering. Length-banded candidate join: the
+    * |n_chars diff| <= 20 predicate confines a match to the same or an
+    * adjacent 32-char bucket, so emitting the right side under its 3
+    * candidate buckets makes this a pure equi-join on (source, bucket) —
+    * linear in block size instead of quadratic per source, with an
+    * IDENTICAL result set (each qualifying pair matches exactly one key).
+    */
   // The verified pair list itself is also memoized: q43, q52 and q99 each
   // consume it, and the banded join + exploded-token intersection is
   // ~2 s/consumer at sf0.1 while the result is a few hundred rows.
-  private val jpairFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    jpairFrames.synchronized {
-      jpairFrames.getOrElse((s, d), {
-        jpairFrames.values.foreach(_.unpersist())
-        jpairFrames.clear()
-        val df = jaccardPairsBuild(s, d).cache()
-        jpairFrames.put((s, d), df)
-        df
-      })
-    }
+  private val jaccardPairs = Memo.frame("jaccard_pairs") { (s, d) =>
+    jaccardPairsBuild(s, d).cache()
+  }
 
   // Cached: several consumers (sizes, both token-join sides, the banded
   // builder) would otherwise each recompute the shingle construction from
   // scratch — Spark does not share work across join branches without
-  // explicit materialization. (~2KB/doc; latest (session, dir) only.)
-  private def gramFrame(s: SparkSession, d: String): DataFrame =
-    gramFrames.synchronized {
-      gramFrames.getOrElse((s, d), {
-        gramFrames.values.foreach(_.unpersist())
-        gramFrames.clear()
-        val df = fanOut(docsWithDups(s, d))
-          .select(col("doc_id"), col("source"), col("n_chars"),
-            TextOps.wordShingles(col("text"), 3).as("grams"))
-          .cache()
-        gramFrames.put((s, d), df)
-        df
-      })
-    }
+  // explicit materialization. (~2KB/doc.)
+  private val gramFrame = Memo.frame("grams") { (s, d) =>
+    fanOut(docsWithDups(s, d))
+      .select(col("doc_id"), col("source"), col("n_chars"),
+        TextOps.wordShingles(col("text"), 3).as("grams"))
+      .cache()
+  }
 
   private def jaccardPairsBuild(s: SparkSession, d: String): DataFrame = {
     val docs = gramFrame(s, d)
@@ -2428,19 +2210,9 @@ object PipelineQueries {
   // The production-shaped verified pair list: banded candidates -> exact
   // verify (q43/q52 consume it; q99 keeps the exact builder as its
   // independent truth side).
-  private val bjpairFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def bandedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    bjpairFrames.synchronized {
-      bjpairFrames.getOrElse((s, d), {
-        bjpairFrames.values.foreach(_.unpersist())
-        bjpairFrames.clear()
-        val df = bandedJaccardPairsBuild(s, d).cache()
-        bjpairFrames.put((s, d), df)
-        df
-      })
-    }
+  private val bandedJaccardPairs = Memo.frame("jaccard_banded") { (s, d) =>
+    bandedJaccardPairsBuild(s, d).cache()
+  }
 
   /** [[jaccardPairsBuild]] with the candidate stage routed through the
     * MinHash band index instead of the length-bucket self-join: band
@@ -2543,47 +2315,39 @@ object PipelineQueries {
     * `pq_codes` step so its cost is reported, not charged to whichever
     * consumer runs first.
     */
-  private val pqIndexFrames = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  private[graft] def pqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pqIndexFrames.synchronized {
-      pqIndexFrames.getOrElse((s, d), {
-        pqIndexFrames.values.foreach { case (a, b) => a.unpersist(); b.unpersist() }
-        pqIndexFrames.clear()
-        graft.functions.GraftFunctions.register(s)
-        val e = embNorms(s, d)
-        // Sampled codebook: PqK training vectors stride-picked by id
-        // (codebook SIZE is fixed — a compression knob — while the pick
-        // stride derives from n so the sample spans the corpus).
-        val params = e.agg(count(lit(1)).as("n")).select(
-          greatest(lit(1L), (col("n") / lit(PqK)).cast("long")).as("cstride"))
-        val train = e.crossJoin(broadcast(params))
-          .filter(pmod(col("vec_id"), col("cstride")) ===
-            pmod(lit(5L), col("cstride")))
-          .withColumn("k", row_number().over(Window.orderBy(col("vec_id").asc)))
-          .filter(col("k") <= PqK)
-        val cb = train
-          .select(col("k"), explode(pqSubStructs(col("embedding"))).as("mc"))
-          .select(col("k"), col("mc.m").as("m"), col("mc.sv").as("cw"))
-          .cache()
-        // Encode: per (vector, subspace) argmin-d2 codeword (k tiebreak).
-        // groupBy min(struct) = map-side partial argmin — no window
-        // shuffle of the n×M×K scored rows.
-        val codes = e
-          .select(col("vec_id"), explode(pqSubStructs(col("embedding"))).as("ms"))
-          .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
-          .join(broadcast(cb), Seq("m"))
-          .select(col("vec_id"), col("m"), col("k"),
-            VectorOps.dist2Decimal(col("sv"), col("cw")).as("d2"))
-          .groupBy("vec_id", "m")
-          .agg(min(struct(col("d2"), col("k"))).as("mk"))
-          .select(col("vec_id"), col("m"), col("mk.k").as("k"))
-          .cache()
-        pqIndexFrames.put((s, d), (cb, codes))
-        (cb, codes)
-      })
-    }
+  private[graft] val pqIndex = Memo[(DataFrame, DataFrame)]("pq_codes",
+      p => Seq(p._1, p._2)) { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    val e = embNorms(s, d)
+    // Sampled codebook: PqK training vectors stride-picked by id
+    // (codebook SIZE is fixed — a compression knob — while the pick
+    // stride derives from n so the sample spans the corpus).
+    val params = e.agg(count(lit(1)).as("n")).select(
+      greatest(lit(1L), (col("n") / lit(PqK)).cast("long")).as("cstride"))
+    val train = e.crossJoin(broadcast(params))
+      .filter(pmod(col("vec_id"), col("cstride")) ===
+        pmod(lit(5L), col("cstride")))
+      .withColumn("k", row_number().over(Window.orderBy(col("vec_id").asc)))
+      .filter(col("k") <= PqK)
+    val cb = train
+      .select(col("k"), explode(pqSubStructs(col("embedding"))).as("mc"))
+      .select(col("k"), col("mc.m").as("m"), col("mc.sv").as("cw"))
+      .cache()
+    // Encode: per (vector, subspace) argmin-d2 codeword (k tiebreak).
+    // groupBy min(struct) = map-side partial argmin — no window
+    // shuffle of the n×M×K scored rows.
+    val codes = e
+      .select(col("vec_id"), explode(pqSubStructs(col("embedding"))).as("ms"))
+      .select(col("vec_id"), col("ms.m").as("m"), col("ms.sv").as("sv"))
+      .join(broadcast(cb), Seq("m"))
+      .select(col("vec_id"), col("m"), col("k"),
+        VectorOps.dist2Decimal(col("sv"), col("cw")).as("d2"))
+      .groupBy("vec_id", "m")
+      .agg(min(struct(col("d2"), col("k"))).as("mk"))
+      .select(col("vec_id"), col("m"), col("mk.k").as("k"))
+      .cache()
+    (Memo.materialize(cb), Memo.materialize(codes))
+  }
 
   private def pqSubStructs(frame: Column): Column = array((0 until PqM).map(m =>
     struct(lit(m).as("m"),

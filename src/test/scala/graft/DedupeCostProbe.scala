@@ -26,7 +26,7 @@ object DedupeCostProbe {
       println(f"== $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    warm(spark, dir)
+    census(spark, dir); input(spark, dir)
     for (r <- 1 to 2) {
       val cols = Seq("pik", "zip3", "geokey_blk") ++ comparisons.map(_.column)
       val cen = census(spark, dir).select(cols.map(col): _*)

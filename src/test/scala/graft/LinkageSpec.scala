@@ -697,4 +697,14 @@ class LinkageSpec extends SparkTestBase {
     assert(planted.length * 2 >= nPlantable,
       s"recovered ${planted.length} of $nPlantable planted refilings")
   }
+
+  test("q107 m_combined rounds a 6-dp tie like DuckDB round(DOUBLE, 6)") {
+    // The midpoint of 0.414782 and 0.414785 is the double
+    // 0.41478349999999997; x·1e6 is exactly 414783.5, so DuckDB rounds
+    // it up, while rounding its decimal rendering would round down.
+    val mid = (0.414782 + 0.414785) / 2
+    assert(LinkageQueries.roundDouble6(mid) == 0.414784)
+    assert(LinkageQueries.roundDouble6(-mid) == -0.414784)
+    assert(LinkageQueries.roundDouble6(0.1234564) == 0.123456)
+  }
 }
