@@ -153,7 +153,8 @@ object Pipeline {
     * ([[graft.sources.ConfigFile]]): its linkage section (pass list,
     * lambda, threshold) drives the pass-keyed stage artifacts; omitted,
     * the hard-wired defaults apply (and `config/defaults.yaml` parses to
-    * exactly those, spec-pinned).
+    * exactly those, spec-pinned). After the stage lines it prints one line
+    * per registered [[Memo]]: its builds, hits and own build seconds.
     */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -168,6 +169,10 @@ object Pipeline {
     run(spark, sfDir, outDir, cfg = cfg).foreach { r =>
       val verb = if (r.skipped) "skipped (complete)" else f"wrote in ${r.sec}%.1f s"
       println(s"[pipeline] ${r.stage}: ${r.tables.mkString(", ")} — $verb")
+    }
+    Memo.registered.foreach { m =>
+      println(f"[pipeline] memo ${m.name}: builds=${m.builds} hits=${m.hits} " +
+        f"own_s=${m.buildSeconds}%.2f")
     }
     spark.stop()
   }

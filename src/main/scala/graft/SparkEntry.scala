@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -49,7 +51,7 @@ object SparkEntry {
   def warmSteps: Seq[(String, (SparkSession, String) => Unit)] =
     memos.map(m => m.name -> ((s: SparkSession, d: String) => { m(s, d); () }))
 
-  /** Runs every memo's build at once, one thread each, and returns
+  /** Runs every memo's build at once through [[Par.all]] and returns
     * (memo, seconds) where seconds is the memo's own build time in this
     * call (0 when it was already built). A build that reaches another memo
     * blocks on that memo's lock, and memo build seconds exclude nested
@@ -61,17 +63,10 @@ object SparkEntry {
   def runWarm(spark: SparkSession, sfDir: String,
       steps: Seq[Memo[_]] = memos): Seq[(String, Double)] = {
     val before = steps.map(_.buildSeconds)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[(String, Throwable)]()
-    val threads = steps.map { m =>
-      new Thread(() =>
-        try { m(spark, sfDir); () }
-        catch { case e: Throwable => failures.add(m.name -> e); () },
-        s"warm-${m.name}")
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join())
-    if (!failures.isEmpty) {
-      val fs = failures.toArray(Array.empty[(String, Throwable)]).toSeq
+    val outcomes = Par.all(spark, "warm",
+      steps.map(m => m.name -> (() => Try { m(spark, sfDir); () })))
+    val fs = steps.zip(outcomes).collect { case (m, Failure(t)) => m.name -> t }
+    if (fs.nonEmpty) {
       val e = new RuntimeException("warm failed: " +
         fs.map { case (name, t) => s"$name ($t)" }.mkString("; "), fs.head._2)
       fs.tail.foreach { case (_, t) => e.addSuppressed(t) }

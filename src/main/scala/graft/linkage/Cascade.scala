@@ -1,5 +1,6 @@
 package graft.linkage
 
+import graft.Par
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,7 +166,7 @@ object LinkageCascade {
     * OVERLAPPED EXECUTION (guide §2.6 "overlap independent jobs"; round-19):
     * passes are processed in groups of [[PassLookahead]]. Within a group
     * every pass's predict runs over the GROUP-ENTRY remainder, submitted
-    * concurrently from a small thread pool, so one pass's straggler tail
+    * concurrently through [[graft.Par]], so one pass's straggler tail
     * back-fills with the next pass's scan/join tasks instead of idling the
     * executors — measured per-pass wall at sf0.1 was a near-constant
     * ~1.3-2.4 s across all 15 passes even as the remainder shrank to a few
@@ -183,9 +184,6 @@ object LinkageCascade {
       passes: Seq[BlockingPass],
       cfg: LinkageConfig,
       acc0: Option[DataFrame]): (Option[DataFrame], DataFrame) = {
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
     // A trailing undersized group merges into its predecessor (13 passes →
     // 3+3+3+4, not 3+3+3+3+1): one fewer sequential barrier, and the
     // widened group sits LAST, where passes link the fewest records, so
@@ -198,7 +196,6 @@ object LinkageCascade {
     }
     grouped.foldLeft((acc0, input)) {
       case ((acc, remaining), group) =>
-        val t0 = System.nanoTime()
         // MEMORY_ONLY: the link frames are tiny (ids + weight) but the
         // default MEMORY_AND_DISK localCheckpoint still writes blocks
         // through the disk store — under I/O contention those writes
@@ -208,27 +205,23 @@ object LinkageCascade {
         // frames are KB-scale against GB-scale storage memory; anything
         // bigger (addContiguousId's full-table checkpoint) keeps the
         // disk-backed default.
-        val predicted: Seq[(BlockingPass, DataFrame)] = Await.result(
-          Future.sequence(group.map { pass =>
-            Future {
+        val predicted: Seq[DataFrame] = Par.all(input.sparkSession, "cascade_group",
+          group.map { pass =>
+            pass.name -> { () =>
               val census = refs.getOrElse(pass.ref, throw new IllegalArgumentException(
                 s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
                   s"was given only ${refs.keys.mkString(", ")}"))
-              pass -> predict(census, remaining, pass, cfg)
+              predict(census, remaining, pass, cfg)
                 .withColumn("pass", lit(pass.name))
                 .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
             }
-          }),
-          Duration.Inf)
-        if (sys.env.contains("GRAFT_CASCADE_TIMING"))
-          System.err.println(f"CASCADE group ${group.map(_.name).mkString("+")}: " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+          })
         // Within-group resolution IN PASS ORDER over the materialized
         // frames: pass i keeps only records no earlier in-group pass
         // linked (the cross-group exclusion already happened — every
         // predict above read the group-entry remainder).
         val resolved = predicted.foldLeft(Seq.empty[DataFrame]) {
-          case (done, (_, pl)) =>
+          case (done, pl) =>
             val filtered = done.foldLeft(pl) { (df, earlier) =>
               df.join(earlier.select("rec_id"), Seq("rec_id"), "left_anti")
             }
@@ -751,26 +744,19 @@ object LinkageCascade {
     // Sessions are independent (each owns its blocking, cached gamma frame
     // and iteration loop), so they submit their Spark jobs CONCURRENTLY —
     // wall-clock is the slowest session, not the sum. Results stay
-    // deterministic: Future.sequence preserves pass order and each
+    // deterministic: Par.all returns results in pass order and each
     // session's math is self-contained. (The cascade's passes, by
     // contrast, are inherently sequential — later passes must not see
     // records earlier passes linked.)
-    val sessions: Seq[(Set[String], Map[(String, Int), Double], EmSessionReport)] = {
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.sequence(trainingPasses.map { p =>
-          Future {
-            val cmps = p.comparisonsFor(cfg)
-            val (m, its, conv, delta) =
-              emSession(census, input, p, cmps, cfg, iterations, cvProvider(p), tol)
-            (cmps.map(_.name).toSet, m,
-              EmSessionReport(p.keys, its, conv, delta))
-          }
-        }),
-        Duration.Inf)
-    }
+    val sessions: Seq[(Set[String], Map[(String, Int), Double], EmSessionReport)] =
+      Par.all(input.sparkSession, "em_sessions", trainingPasses.map { p =>
+        p.name -> { () =>
+          val cmps = p.comparisonsFor(cfg)
+          val (m, its, conv, delta) =
+            emSession(census, input, p, cmps, cfg, iterations, cvProvider(p), tol)
+          (cmps.map(_.name).toSet, m, EmSessionReport(p.keys, its, conv, delta))
+        }
+      })
     val ests = cfg.comparisons.flatMap { c =>
       val ms = sessions.collect { case (names, m, _) if names.contains(c.name) => m }
       require(ms.nonEmpty, s"no training session estimates comparison '${c.name}'")

@@ -71,7 +71,6 @@ object Components {
     var jumping = false
     var prevChanged = Long.MaxValue
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       val neighborMin = sym
         .join(labels, sym("a") === labels("node"))
         .groupBy(col("b").as("node2"))
@@ -119,12 +118,7 @@ object Components {
           newLabel.as("cluster_id"),
           (newLabel < col("l.cluster_id")).as("chg"))
         .localCheckpoint(eager = false)
-      val t0 = System.nanoTime()
       val changed = next.filter(col("chg")).count()
-      if (sys.env.contains("GRAFT_CC_TIMING"))
-        System.err.println(f"CC iter $iter: changed=$changed jump=$jumping " +
-          f"count=${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"round=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       labels = next.select("node", "cluster_id")
       converged = changed == 0
       // Engage on the first non-geometric round; the iter>=8 backstop

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Memo, QueryDef}
+import graft.{Memo, Par, QueryDef}
 import graft.functions.{GraftFunctions, Phonetics}
 import graft.linkage._
 import graft.operators.Preprocess
@@ -700,7 +700,8 @@ object LinkageQueries {
     val cen = finish(derive(cpre), gq, "pik").cache()
     // The two sides derive from independent cached subtrees (census from
     // cpre, input from ib/gq); force them concurrently.
-    forcePar(Seq(cen, in))
+    Par.all(s, "linkage_sides",
+      Seq("census" -> (() => cen.count()), "input" -> (() => in.count())))
     Sides(cen, in, cpre, Seq(praw, ipre, ib, gq, cpre, in, cen))
   }
 
@@ -752,7 +753,8 @@ object LinkageQueries {
       cen.select("pik", "zip3", "geokey", "geokey_blk", "street_num_blk",
         "sdx_street_blk"),
       Seq("pik")).cache()
-    forcePar(Seq(nd, gb))
+    Par.all(s, "linkage_reffiles",
+      Seq("namedob" -> (() => nd.count()), "geobase" -> (() => gb.count())))
     (nd, gb)
   }
 
@@ -774,18 +776,6 @@ object LinkageQueries {
   def cascadeRefs(s: SparkSession, d: String): Map[String, DataFrame] = {
     val (nd, gb) = refFiles(s, d)
     Map("census" -> census(s, d), "namedob" -> nd, "geobase" -> gb)
-  }
-
-  /** Force a set of independent cached frames concurrently (one count
-    * job each, submitted from futures so the jobs overlap).
-    */
-  private def forcePar(dfs: Seq[DataFrame]): Unit = {
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
-      scala.concurrent.Future.sequence(dfs.map(df => Future(df.count()))),
-      Duration.Inf); ()
   }
 
   // ---- SQL mirrors of the sides ------------------------------------------
@@ -2821,19 +2811,12 @@ object LinkageQueries {
         // the anti-join below applies that filter to the materialized
         // KB-scale link frames, links identical (oracle green).
         val zadj = LinkageCascade.zip3Adjacent(rem)
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val l1F = Future(LinkageCascade.predict(ref, zadj, z1, config)
-          .withColumn("pass", lit(z1.name))
-          .localCheckpoint())
-        val l2F = Future(LinkageCascade.predict(ref, zadj, z2, config)
-          .withColumn("pass", lit(z2.name))
-          .localCheckpoint())
-        val l1 = Await.result(l1F, Duration.Inf)
-        val l2 = Await.result(l2F, Duration.Inf)
-          .join(l1.select("rec_id"), Seq("rec_id"), "left_anti")
-        l1.unionByName(l2)
+        val Seq(l1, l2) = Par.all(s, "q129_zip3_adjacent", Seq(z1, z2).map { z =>
+          z.name -> (() => LinkageCascade.predict(ref, zadj, z, config)
+            .withColumn("pass", lit(z.name))
+            .localCheckpoint())
+        })
+        l1.unionByName(l2.join(l1.select("rec_id"), Seq("rec_id"), "left_anti"))
           .select(col("pik"), col("rec_id"),
             round(col("match_weight"), 6).as("mw"), col("pass"))
       },

@@ -222,7 +222,7 @@ object PipelineQueries {
     * volume at every decade — a fixed shortlist covers a shrinking
     * fraction as probes grow with k and recall decays with scale
     * (measured: shortlist-8 kept 16% of what the candidates admit at
-    * 1×, 14% at 30×; 40·probes keeps 87.5% / 92.9% — RetrProbe).
+    * 1×, 14% at 30×; 40·probes keeps 87.5% / 92.9%).
     */
   private[graft] val PqShortPerProbe = 40
 
@@ -909,7 +909,7 @@ object PipelineQueries {
   }
 
   /** Probe count derived from the REALIZED centroid count: a FIXED probe
-    * count loses recall as k grows — HierProbe at the 30× point (k≈484)
+    * count loses recall as k grows — at the 30× point (k≈484)
     * measured probes-3 missing 64/4408 true pairs where the 10× point
     * (k≈160) missed 0, and probes-6 restoring 0/4408 at ~equal assignment
     * wall (the n·k dots dominate; probes only widen the candidate join).
@@ -932,7 +932,7 @@ object PipelineQueries {
 
   /** Driver-side scalar twin of [[derivedProbes]] — the ONE home of the
     * probe rule for code that already holds the realized k as a long
-    * (the ladder's fp, ScaleBench's candidate-ceiling audit, RetrProbe).
+    * (the ladder's fp, ScaleBench's candidate-ceiling audit).
     * Inlining the formula at those sites let the audit silently measure
     * a different geometry than the queries it gates if the production
     * rule ever moved.
@@ -978,7 +978,7 @@ object PipelineQueries {
     * best fine cell hides in a far coarse cell — PipelineQueriesSpec
     * pins zero pair loss at the test SFs with coarseProbes = 2.
     *
-    * MEASURED VERDICT (HierProbe): at 10× (k≈160), coarseProbes 2/3/4
+    * MEASURED VERDICT (BASELINE.md, round 14): at 10× (k≈160), coarseProbes 2/3/4
     * miss 19/11/7 of 1000 true pairs at 1.4×/1.8×/2.4× the flat stage's
     * wall. At 30× (k≈484) the wall ordering flips (flat's n·k term
     * dominates: cp2 runs 96 s vs flat-p3's 99 s) but the stride-picked
@@ -1045,7 +1045,7 @@ object PipelineQueries {
     * measured scale ladder past flat IVF. Cost n·(kc + coarseProbes·k/kc)
     * with kc ≈ √(3k) vs flat's n·k.
     *
-    * MEASURED (HierProbe, 30× point, k≈484, 4408 true pairs): trained
+    * MEASURED (BASELINE.md, 30× point, k≈484, 4408 true pairs): trained
     * beats the stride-hierarchical variant on recall at every equal
     * probe setting (cp2/3/4-fp3 miss 241/150/112 vs stride's
     * 324/163/144) and beats flat on wall throughout (cp2-fp3 42 s,
@@ -1065,10 +1065,10 @@ object PipelineQueries {
   /** [[trainedCellAssignments]] with BOTH probe counts derived from the
     * realized index geometry — the PINNED ladder configuration. kc
     * follows trainedCoarseCentroids' own rule (ceil(√(3k))); the COARSE
-    * probe count — the knob that binds recall (HierProbe 30×: cp4/6/8 at
+    * probe count — the knob that binds recall (measured at 30×: cp4/6/8 at
     * fp8 miss 6/2/0) — derives as cp = max(3, ceil(kc/5)); the fine
     * probe count follows the flat derived-probe rule ([[derivedProbes]]).
-    * Round-15 determinism audit: two 30× HierProbe sessions on the same
+    * Round-15 determinism audit: two 30× measurement sessions on the same
     * data reproduce the trained arms BITWISE (identical candidate and
     * missed counts, 0/4408 at cp8-fp≥6) — the whole ladder is
     * deterministic (decimal-summed kmeans means, id tiebreaks), so the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Memo, QueryDef}
+import graft.{Memo, Par, QueryDef}
 import graft.operators.{Noise, Preprocess}
 import graft.ops.{DfOps, Lineage}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -436,9 +436,6 @@ object RefFileQueries {
   }
 
   private val accFrames = Memo[AccFrames]("reffile_accuracy", _.cached) { (s, d) =>
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val c = refChain(s, d)
     val truth = numident(s, d).select(col("record_id"), col("ssn").as("simulant_id"))
       .unionByName(c.t1040.select(col("record_id"), col("k").as("simulant_id")))
@@ -453,40 +450,36 @@ object RefFileQueries {
     // and inRecs share no inputs beyond the already-cached chain, so
     // their jobs overlap instead of running back to back; psp and piked
     // both wait only on the first wave.
-    val refGtF = Future(
-      Lineage.resolveGroundTruth(c.pFull.unionByName(c.pG), truth)
-        .withColumnRenamed("n_truths", "n_unique_simulants").localCheckpoint())
-    val piksF = Future(DfOps.addContiguousId(
-        c.ndrFull.select("ssn").distinct(), "ssn", "pik")
-      .select("ssn", "pik").localCheckpoint())
     val holders = pmod(col("k"), lit(5)) =!= 4
     val itinFiler = pmod(col("k"), lit(5)) === 4 && pmod(col("k"), lit(3)) === 0
     val missedLink = holders && pmod(col("k"), lit(67)) === 0
     val wrongLink = holders && pmod(col("k"), lit(83)) === 0 &&
       pmod(col("k") + 1, lit(5)) =!= 4
-    val inRecsF = Future(People.persons(s, d).select(
-      concat(lit("cin_"), col("k")).as("in_id"),
-      col("k").as("simulant_in"),
-      when(missedLink, lit(null).cast("long"))
-        .when(wrongLink, col("k") + 1)
-        .when(holders, col("k"))
-        .when(itinFiler, lit(900000000L) + col("k"))
-        .otherwise(lit(null).cast("long")).as("assigned_ssn")).localCheckpoint())
-    val refGt = Await.result(refGtF, Duration.Inf)
-    val piks = Await.result(piksF, Duration.Inf)
-    val inRecs = Await.result(inRecsF, Duration.Inf)
+    val Seq(refGt, piks, inRecs) = Par.all(s, "reffile_accuracy", Seq(
+      "refGt" -> (() => Lineage.resolveGroundTruth(c.pFull.unionByName(c.pG), truth)
+        .withColumnRenamed("n_truths", "n_unique_simulants").localCheckpoint()),
+      "piks" -> (() => DfOps.addContiguousId(
+          c.ndrFull.select("ssn").distinct(), "ssn", "pik")
+        .select("ssn", "pik").localCheckpoint()),
+      "inRecs" -> (() => People.persons(s, d).select(
+        concat(lit("cin_"), col("k")).as("in_id"),
+        col("k").as("simulant_in"),
+        when(missedLink, lit(null).cast("long"))
+          .when(wrongLink, col("k") + 1)
+          .when(holders, col("k"))
+          .when(itinFiler, lit(900000000L) + col("k"))
+          .otherwise(lit(null).cast("long")).as("assigned_ssn")).localCheckpoint())))
     val recPik = c.ndrFull.select("record_id", "ssn")
       .unionByName(c.geob.select("record_id", "ssn"))
       .join(piks, Seq("ssn"))
-    val pspF = Future(refGt.join(recPik, Seq("record_id"))
-      .select("pik", "simulant_id").distinct()
-      .withColumn("nu", count(lit(1)).over(Window.partitionBy("pik")))
-      .localCheckpoint())
-    val pikedF = Future(inRecs
-      .join(piks.withColumnRenamed("ssn", "assigned_ssn"), Seq("assigned_ssn"))
-      .localCheckpoint())
-    val psp = Await.result(pspF, Duration.Inf)
-    val piked = Await.result(pikedF, Duration.Inf)
+    val Seq(psp, piked) = Par.all(s, "reffile_accuracy", Seq(
+      "psp" -> (() => refGt.join(recPik, Seq("record_id"))
+        .select("pik", "simulant_id").distinct()
+        .withColumn("nu", count(lit(1)).over(Window.partitionBy("pik")))
+        .localCheckpoint()),
+      "piked" -> (() => inRecs
+        .join(piks.withColumnRenamed("ssn", "assigned_ssn"), Seq("assigned_ssn"))
+        .localCheckpoint())))
     val confirmed = piked.join(
       c.geob.groupBy("ssn").agg(min("record_id").as("ref_id"))
         .withColumnRenamed("ssn", "assigned_ssn"),

@@ -179,7 +179,7 @@ class BucketedJoinSpec extends SparkTestBase {
     // block key, the ENTIRE predict pipeline up to the per-record
     // resolution plans with no hash exchange on that key — the blocking
     // shuffle the chain pays per pass at 100 TB is paid once at write
-    // time (CascBktProbe prices it at 30×). The l_/r_ column prefixes
+    // time (priced at 30× in BASELINE.md, round 18). The l_/r_ column prefixes
     // are pure aliases, so the bucketed scan's output partitioning
     // carries through the projection to the join.
     import graft.linkage.LinkageCascade

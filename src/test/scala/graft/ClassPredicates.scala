@@ -1,9 +1,8 @@
 package graft
 
-/** Shared noise-class membership predicates for test/dev harnesses — ONE
-  * definition of the class-M (married-surname) slice, mirroring
-  * LinkageQueries.flaggedPersons' isM, so LinkageSpec and RefsProbe cannot
-  * drift from each other.
+/** Shared noise-class membership predicates for tests — ONE definition of
+  * the class-M (married-surname) slice, mirroring
+  * LinkageQueries.flaggedPersons' isM, so LinkageSpec cannot drift from it.
   */
 object ClassPredicates {
 

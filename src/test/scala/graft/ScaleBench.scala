@@ -525,7 +525,7 @@ object ScaleBench {
       // Trained-ladder probes from the realized counts — the PINNED
       // derived rule (PipelineQueries.trainedCellAssignmentsDerived):
       // kc = ceil(√(3k)), cp = max(3, ceil(kc/5)) (the binding recall
-      // knob — HierProbe 30×: cp4/6/8-fp8 miss 6/2/0), fine probes =
+      // knob — measured at 30×: cp4/6/8-fp8 miss 6/2/0), fine probes =
       // the flat derived-probe rule. The ladder is DETERMINISTIC
       // (round-15 audit: two 30× sessions reproduce candidates and
       // misses bitwise — kmeans means are decimal sums, assignment

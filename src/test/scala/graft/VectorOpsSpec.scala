@@ -126,7 +126,7 @@ class VectorOpsSpec extends SparkTestBase {
     // input (different shuffle order, different partial-agg grouping)
     // must reproduce every centroid component BIT FOR BIT — this is what
     // makes the derived coarse-probe rule pinnable instead of a jitter
-    // distribution (two 30× HierProbe sessions reproduced candidate and
+    // distribution (two 30× measurement sessions reproduced candidate and
     // missed counts exactly).
     GraftFunctions.register(spark)
     val data = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
