@@ -1,279 +1,107 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
-  * and prints one JSON line of per-query seconds.
-  *
-  * Each query is forced through a full-column hash-aggregate (NOT count(),
-  * which would let Catalyst prune the scored/derived columns and benchmark
-  * a different, cheaper plan than the one users run).
+/** Query-inventory benchmark: after the table warm-up and the memo warm
+  * phase, times every SparkEntry query on SPARK_GRAFT_SF_DIR over
+  * [[Passes]] passes and prints the per-query medians as one JSON line,
+  * then a compact headline line as the last stdout line.
+  * SPARK_GRAFT_ONLY=q51,q55 narrows the run to those query prefixes.
   */
 object Bench {
+  val Passes = 3
+
+  /** (query, seconds, error) for one query in one pass. */
+  type Sample = (String, Double, Option[String])
+
+  /** Forces complete evaluation of the user-visible plan: a hash of every
+    * column per row, XOR-reduced. `count()` would let Catalyst prune the
+    * derived columns; XOR (unlike SUM) cannot overflow under ANSI mode.
+    */
+  def force(df: DataFrame): Unit = {
+    df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+      .agg(expr("bit_xor(h)")).collect()
+    ()
+  }
+
+  /** [[Passes]] timed passes over the queries, in order. */
+  private[graft] def measure(queries: Seq[(String, () => Unit)]): Seq[Seq[Sample]] =
+    Seq.fill(Passes)(queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      val err =
+        try { run(); None }
+        catch { case e: Throwable => Some(e.toString.take(200)) }
+      (name, (System.nanoTime() - t0) / 1e9, err)
+    })
+
+  private def sec(v: Double): String = f"$v%.3f"
+
+  // Spark exception text carries newlines and plan fragments.
+  private def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
+  } + "\""
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** The full line, then the compact headline line. Each query reports the
+    * median of its passes, or -1 and its first error if any pass failed.
+    */
+  private[graft] def report(passes: Seq[Seq[Sample]], sfDir: String,
+      warmSec: Double, warmBreakdown: Seq[(String, Double)]): Seq[String] = {
+    val perQuery = passes.flatten.groupBy(_._1)
+    val results = passes.head.map { case (name, _, _) =>
+      val samples = perQuery(name)
+      val ts = samples.map(_._2).sorted
+      (name, ts(ts.size / 2), samples.flatMap(_._3).headOption)
+    }
+    val total = results.collect { case (_, t, None) => t }.sum
+    val errors = results.collect { case (name, _, Some(e)) => name -> jstr(e) }
+    val headline = Seq(
+      "metric" -> jstr("total"), "value" -> sec(total), "unit" -> jstr("sec"),
+      "sf" -> jstr(sfDir), "n_queries" -> results.size.toString,
+      "passes" -> passes.size.toString,
+      "pass_totals" -> passes.map(p => sec(p.map(_._2).sum)).mkString("[", ",", "]"),
+      "warm_sec" -> sec(warmSec), "value_with_warm" -> sec(total + warmSec),
+      "n_errors" -> errors.size.toString)
+    val full = Seq(
+      "queries" -> obj(results.map { case (name, t, err) =>
+        name -> (if (err.isDefined) "-1" else sec(t)) }),
+      "errors" -> obj(errors),
+      "warm_breakdown" -> obj(warmBreakdown.map { case (m, t) => m -> sec(t) }))
+    Seq(obj(full ++ headline), obj(headline))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Shared session recipe (GraftSession): local dev defaults (tmpfs
-    // scratch — observed 10-60 s write-stall swings on the shared disk
-    // otherwise; shuffle partitions = cores), a spark-submit
-    // --master/--conf wins. AQE runtime re-planning stays on in both.
     val spark = GraftSession.builder("graft-bench",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
         "spark.sql.adaptive.skewJoin.enabled" -> "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warmup: JIT + parquet footers, so the first measured query isn't
-    // charged for JVM/codegen startup.
+    // JIT + parquet footers, so the first measured query is not charged
+    // for JVM and codegen start-up.
     Tables.all.foreach(t =>
       try Tables.load(spark, sfDir, t).limit(1000).count() catch { case _: Throwable => })
-    // Populate the cross-query memo caches (linkage sides, gram frame) and
-    // report their build cost as its own metric — otherwise it lands on
-    // whichever consumer runs first (q26/q43) and poisons round-over-round
-    // deltas. Every memo builds at once; warm_sec is the WALL time of the
-    // warm phase, and each warm_breakdown value is that memo's own build
-    // seconds (net of the memos it reads), measured under that
-    // concurrency — so the values attribute the phase but need not sum
-    // to warm_sec. A failed memo build fails the bench, naming the memo.
+    // Every memo builds at once; warm_sec is the phase's wall time and
+    // each warm_breakdown value a memo's own build seconds under that
+    // concurrency. A failed build fails the bench, naming the memo.
     val warmT0 = System.nanoTime()
     val warmTimes = SparkEntry.runWarm(spark, sfDir)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
-    // SPARK_GRAFT_ONLY=q51,q55 narrows the run for local iteration; unset
-    // (driver mode) benches the full inventory.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-    def runPass(): Seq[(String, Double, Option[String])] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err =
-        try {
-          val df = fn(spark, sfDir)
-          // hash of every column per row, XOR-reduced: forces complete
-          // evaluation of the user-visible plan. XOR (unlike SUM) cannot
-          // overflow, so ANSI mode never aborts the job mid-benchmark.
-          df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-            .agg(expr("bit_xor(h)")).collect()
-          None
-        } catch { case e: Throwable => Some(e.toString.take(200)) }
-      (name, (System.nanoTime() - t0) / 1e9, err)
-    }
-    // Steady-state measurement: up to SPARK_GRAFT_PASSES (default 2) full
-    // passes, per-query MIN across passes. The box is a shared host;
-    // minutes-long external throttling windows land 5-10x slowdowns on
-    // whichever queries they overlap (observed: identical plans at 6 s and
-    // 68 s across runs), and min-of-N is the standard way to measure the
-    // code rather than the neighbors.
-    //
-    // THROTTLE-PROOFING (round-14 lesson: the official BENCH_r14.json
-    // shipped as a guard-tripped SINGLE throttled pass reading 4.8×
-    // baseline for an engine that independently measures 0.40×):
-    // a throttle-detected pass is never the only sample. When pass 1
-    // blows the guard, the CHAIN queries (q13-q20 + q26-q38 — the
-    // BASELINE.md gate) are re-run alone, up to 3 bounded retries, until
-    // one chain pass lands within 2× of the committed bench_last.json
-    // chain at this commit (absolute 90 s fallback when no history is
-    // readable); per-query values then take the min over every sample
-    // INCLUDING the committed same-commit history (`"agg":"min+hist"`),
-    // and the emitted line carries an explicit `"throttled"` verdict so
-    // the artifact can never silently masquerade as a clean run.
-    val maxPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val passGuardSec = 300.0
-    // FULL numeric id (digits up to the first '_'): a 2-char slice would
-    // also match q130..q138 ("13" prefix) and silently inflate the chain
-    // with ~half of the D/E-family tails — exactly what r14's chain_sec
-    // did once q130+ landed.
-    def qNum(name: String): Int = {
-      val ds = name.drop(1).takeWhile(_.isDigit)
-      if (name.startsWith("q") && ds.nonEmpty) ds.toInt else -1
-    }
-    def isChain(name: String): Boolean = {
-      val n = qNum(name)
-      (n >= 13 && n <= 20) || (n >= 26 && n <= 38)
-    }
-    // This build's git commit: the hist floor below may only read history
-    // measured on the SAME commit — otherwise a real regression landing
-    // during a throttled window is silently masked by the predecessor
-    // commit's faster times, and floored minima ratchet forward across
-    // commits. Best-effort: no git → no floor.
-    val commit: String =
-      try {
-        val p = new ProcessBuilder("git", "rev-parse", "HEAD").start()
-        val out = new String(p.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        p.waitFor()
-        if (out.matches("[0-9a-f]{40}")) out else ""
-      } catch { case _: Throwable => "" }
-    // Per-query history from the committed bench_last.json (read BEFORE
-    // this run overwrites it), USED ONLY when its commit field matches
-    // HEAD. Best-effort: absent/corrupt/foreign-commit history just
-    // disables the hist floor and falls back to the absolute clean-chain
-    // bar. Floor source is the REPORTED map — under the commit gate every
-    // value in it is a real measurement of this same code (a same-commit
-    // floored report is itself min-of-real-samples), so the floor cannot
-    // compound stale minima across commits.
-    val hist: Map[String, Double] =
-      try {
-        val txt = scala.io.Source.fromFile("bench_last.json").mkString
-        val cre = """"commit":"([0-9a-f]{40})"""".r
-        val histCommit = cre.findFirstMatchIn(txt).map(_.group(1))
-        if (commit.isEmpty || !histCommit.contains(commit)) Map.empty
-        else {
-          // Parse the reported queries map only (stop before queries_raw).
-          val qtxt = txt.indexOf("\"queries_raw\"") match {
-            case -1 => txt
-            case i  => txt.substring(0, i)
-          }
-          val qre = """"(q[0-9]+[a-z0-9_]*)":(-?[0-9.]+)""".r
-          qre.findAllMatchIn(qtxt)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 >= 0).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
-    val histChain = {
-      val c = hist.collect { case (k, v) if isChain(k) => v }
-      if (c.nonEmpty && c.size >= 15) Some(c.sum) else None
-    }
-    def runChainPass(): Seq[(String, Double, Option[String])] = {
-      selected.filter { case (n, _) => isChain(n) }.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val err =
-          try {
-            val df = fn(spark, sfDir)
-            df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-              .agg(expr("bit_xor(h)")).collect()
-            None
-          } catch { case e: Throwable => Some(e.toString.take(200)) }
-        (name, (System.nanoTime() - t0) / 1e9, err)
-      }
-    }
-    val cleanChainBar = histChain.map(_ * 2.0).getOrElse(90.0)
-    val pass1 = runPass()
-    val pass1Throttled = pass1.map(_._2).sum > passGuardSec
-    val morePasses =
-      if (maxPasses <= 1 || pass1Throttled) Nil
-      else (2 to maxPasses).map(_ => runPass())
-    // Bounded chain-only retries when the full passes never sampled the
-    // chain cleanly (each retry is ~chain-sized, not inventory-sized).
-    var chainRetries: Seq[Seq[(String, Double, Option[String])]] = Nil
-    if (pass1Throttled) {
-      var tries = 0
-      var clean = false
-      while (!clean && tries < 3) {
-        val r = runChainPass()
-        chainRetries = chainRetries :+ r
-        clean = r.map(_._2).sum <= cleanChainBar
-        tries += 1
-      }
-    }
-    val passesRun = 1 + morePasses.size
-    val measured = morePasses.foldLeft(pass1) { (acc, p) =>
-      acc.zip(p).map { case ((name, t1, e1), (_, t2, e2)) =>
-        // A query must succeed in EVERY pass to count as error-free; the
-        // reported time is the fastest clean pass (or -1 via err below).
-        (name, math.min(t1, t2), e1.orElse(e2))
-      }
-    }
-    val chainMin: Map[String, (Double, Option[String])] =
-      chainRetries.flatten.groupBy(_._1).map { case (n, rs) =>
-        n -> (rs.map(_._2).min, rs.flatMap(_._3).headOption)
-      }
-    val chainBest = chainRetries
-      .map(r => r.map(_._2).sum).filter(_ <= cleanChainBar).sorted.headOption
-    // Throttled verdict, SCOPED: `chainThrottled` = the chain never got a
-    // clean sample this run (pass 1 tripped the guard and every retry
-    // stayed above the bar) — that is the verdict the BASELINE.md gate
-    // reads. A clean chain retry does NOT clear the non-chain queries:
-    // when pass 1 tripped the guard they carry a single throttle-suspect
-    // sample each, flagged separately as `nonchain_single_sample`.
-    val throttled = pass1Throttled && chainBest.isEmpty
-    val nonchainSingleSample = pass1Throttled && morePasses.isEmpty
-    // Raw minima of THIS RUN's own samples (no hist floor) — persisted
-    // alongside the report so a floored artifact can never masquerade as
-    // fresh measurement.
-    val rawResults = measured.map { case (name, t, e) =>
-      chainMin.get(name) match {
-        case Some((rt, re)) => (name, math.min(t, rt), e.orElse(re))
-        case None           => (name, t, e)
-      }
-    }
-    val results = measured.map { case (name, t, e) =>
-      val withRetry = chainMin.get(name) match {
-        case Some((rt, re)) => (name, math.min(t, rt), e.orElse(re))
-        case None           => (name, t, e)
-      }
-      // min-over-history only for a still-throttled artifact: a clean run
-      // stands on its own measurements.
-      if (throttled && e.isEmpty)
-        hist.get(name).map(h => (name, math.min(withRetry._2, h), withRetry._3))
-          .getOrElse(withRetry)
-      else withRetry
-    }
-    results.collect { case (name, _, Some(e)) =>
+    val passes = measure(selected.map { case (name, fn) =>
+      name -> (() => force(fn(spark, sfDir)))
+    })
+    passes.flatten.collect { case (name, _, Some(e)) =>
       System.err.println(s"BENCH ERROR $name: $e")
     }
-    def sec(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v, err) =>
-      // A crashed query must not masquerade as a fast one: report -1.
-      val shown = if (err.isDefined) "-1" else sec(v)
-      s"\"" + k + "\":" + shown
-    }.mkString("{", ",", "}")
-    // Full JSON string escape: Spark exception toString often carries
-    // newlines/control chars (AnalysisException plan fragments) that would
-    // make the emitted line unparsable exactly when a query fails.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
-    val errs = results.collect { case (k, _, Some(e)) =>
-      s"\"" + k + "\":" + jstr(e)
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, v, None) => v }.sum
-    val nErr = results.count(_._3.isDefined)
-    // BASELINE.md chains: prep = q13..q20, linkage = q26..q38; their sum is
-    // the ratio vs the reference small_sample run (41.66 s).
-    def chain(lo: Int, hi: Int): Double = results.collect {
-      case (k, v, None) if { val n = qNum(k); n >= lo && n <= hi } => v
-    }.sum
-    val prepSec = chain(13, 20)
-    val linkSec = chain(26, 38)
-    // One JSON line; the long queries map comes FIRST so the headline
-    // scalars land at the END of the line — the harness keeps only the
-    // last ~2000 chars of output, and totals must survive that window.
-    val warmBreakdown = warmTimes
-      .map { case (step, t) => s"\"" + step + "\":" + sec(t) }
-      .mkString("{", ",", "}")
-    val agg = if (throttled) "min+hist" else "min"
-    val qsRaw = rawResults.map { case (k, v, err) =>
-      val shown = if (err.isDefined) "-1" else sec(v)
-      s"\"" + k + "\":" + shown
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"queries":$qs,"errors":$errs,"sf":"$sfDir","passes":$passesRun,"chain_retries":${chainRetries.size},"throttled":$throttled,"chain_throttled":$throttled,"nonchain_single_sample":$nonchainSingleSample,"agg":"$agg","commit":"$commit","queries_raw":$qsRaw,"warm_breakdown":$warmBreakdown,"warm_sec":${sec(warmSec)},"prep_sec":${sec(prepSec)},"linkage_sec":${sec(linkSec)},"chain_sec":${sec(prepSec + linkSec)},"n_errors":$nErr,"metric":"total","value":${sec(total)},"unit":"sec"}"""
-    println(line)
-    // COMPACT second line, printed LAST so it lands inside the harness's
-    // ~2000-char stdout tail window. The full line above is ~6 KB (157-query
-    // map + errors + raw + warm breakdown) and front-truncates in that
-    // window, which left every BENCH_r10..r18 artifact with "parsed": null —
-    // the driver has been grading performance blind. This line carries only
-    // the headline scalars (guaranteed well under 1500 chars; no per-query
-    // map — that stays on the full line and in bench_last.json, never
-    // removed or renamed). `value_with_warm` makes any future timed→warm
-    // cost relocation visible in the graded number (round-18 verdict §2).
-    val compact =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"warm_sec":${sec(warmSec)},"value_with_warm":${sec(total + warmSec)},"prep_sec":${sec(prepSec)},"linkage_sec":${sec(linkSec)},"chain_sec":${sec(prepSec + linkSec)},"n_errors":$nErr,"passes":$passesRun,"chain_retries":${chainRetries.size},"agg":"$agg","throttled":$throttled,"chain_throttled":$throttled,"nonchain_single_sample":$nonchainSingleSample,"commit":"$commit"}"""
-    println(compact)
-    // Also drop the full line in the repo so the complete per-query map is
-    // readable even when the captured stdout tail truncates it — but only
-    // for FULL-inventory runs: a SPARK_GRAFT_ONLY iteration run must not
-    // clobber the committed full history the hist floor reads.
-    if (only.isEmpty)
-      try {
-        val w = new java.io.PrintWriter("bench_last.json")
-        try w.println(line) finally w.close()
-      } catch { case _: Throwable => }
+    report(passes, sfDir, warmSec, warmTimes).foreach(println)
     spark.stop()
   }
 }

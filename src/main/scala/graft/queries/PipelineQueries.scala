@@ -1272,10 +1272,10 @@ object PipelineQueries {
     * attaching the embedding arrays shuffles n×k×Dim floats (the
     * measured 10× bottleneck).
     */
-  // Memoized like jaccardPairs: q51 reports the pair list, q124's keep
-  // policy consumes it as its edge set — without the memo q124 re-runs
-  // the whole candidate + verify pipeline (measured 32 s at the 10×
-  // point, exponent 1.09, vs CC-only cost once shared).
+  // Memoized: q51 reports the pair list, q124's keep policy consumes it
+  // as its edge set — without the memo q124 re-runs the whole candidate
+  // + verify pipeline (measured 32 s at the 10× point, exponent 1.09, vs
+  // CC-only cost once shared).
   private val embDedupPairs = Memo.frame("emb_pairs") { (s, d) =>
     embDedupPairsBuild(s, d).cache()
   }
@@ -1289,6 +1289,7 @@ object PipelineQueries {
     *  - the SemDeDup affinity (arnk = 1's csim; q124 keep criterion),
     *  - the incremental corpus cell index (arnk = 1, vec_id < 100000;
     *    q123 probes it).
+    * The last two are filters over this cached frame in their queries.
     * Filtering `e` before or after the per-vector ranking commutes (each
     * vector ranks against the broadcast centroid set independently), so
     * all three projections are value-identical to their previous
@@ -1328,41 +1329,6 @@ object PipelineQueries {
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
     verifyPairs(cand, e, e, "vec_a", "vec_b", 0.9)
-  }
-
-  /** q123's corpus-side cell index (probe-1 home cells) — the PERSISTED
-    * half of the incremental contract: a deployment builds the corpus
-    * index ONCE and each arriving batch probes it, so the per-batch cost
-    * is the batch's own assignment, not the corpus's n·k dots. Measured
-    * necessity: with the index rebuilt per call, q123's 30× exponent was
-    * 1.20 (73.9 s) — almost all of it the corpus assignment the contract
-    * says is amortized. Memoized per (session, dir) behind the
-    * emb_corpus_cells warm step.
-    */
-  private val corpusCellIndex = Memo.frame("emb_corpus_cells") { (s, d) =>
-    // Probe-1 home cells of the corpus slice, read off the shared
-    // ranked pass ([[embDupRankedFlat]]) instead of a third n×k
-    // scoring run; per-vector ranking commutes with the id filter.
-    embDupRankedFlat(s, d)
-      .filter(col("vec_id") < 100000 && col("arnk") === 1)
-      .select(col("vec_id").as("corpus_id"), col("label"), col("cid"))
-      .cache()
-  }
-
-  /** Each vector's cosine to its ASSIGNED (top-1) centroid — SemDeDup's
-    * keep criterion (the member closest to the cluster centroid is the
-    * cluster's representative).
-    */
-  // Memoized: the affinity pass is its own n×k decimal assignment — q124
-  // must not pay it per invocation on top of the pair memo.
-  private val embAffinity = Memo.frame("emb_affinity") { (s, d) =>
-    // Top-1 csim read off the shared ranked pass ([[embDupRankedFlat]],
-    // arnk = 1 ⊆ arnk <= probes) — this was a SECOND full n×k decimal
-    // scoring over the identical frame and centroid set.
-    embDupRankedFlat(s, d)
-      .filter(col("arnk") === 1)
-      .select(col("vec_id").as("node"), col("csim").cast("double").as("aff"))
-      .cache()
   }
 
   /** CTE chain ending in `epairs(vec_a, vec_b, cos)` ≡ [[embDedupPairs]]
@@ -2107,8 +2073,9 @@ object PipelineQueries {
   }
 
   /** CTE chain ending in `bands(doc_id, band, v1, v2)` ≡ [[lshBandRows]]
-    * (expects docs2 in scope). Generated from the SAME minhashParams, so
-    * the oracle can never drift from the Spark hash family.
+    * (expects docs2 and [[gramsCte]] in scope). Generated from the SAME
+    * minhashParams, so the oracle can never drift from the Spark hash
+    * family.
     */
   private def lshBandCtes: String = {
     val minCols = TextOps.minhashParams(LshBands * LshRowsPerBand).zipWithIndex
@@ -2121,15 +2088,10 @@ object PipelineQueries {
         s"SELECT doc_id, CAST($bi AS BIGINT) AS band, " +
           s"m${bi * LshRowsPerBand} AS v1, m${bi * LshRowsPerBand + 1} AS v2 FROM sig")
       .mkString("\n  UNION ALL ")
-    s"""lgrams AS (
-       |  SELECT doc_id,
-       |         list_distinct([array_to_string(w[i:i+2], ' ')
-       |                        FOR i IN range(1, greatest(len(w) - 2, 0) + 1)]) AS grams
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM docs2)),
-       |hx AS (
+    s"""hx AS (
        |  SELECT doc_id, ${TextOps.md5ModSql("mh")} AS x
        |  FROM (SELECT doc_id, md5(shingle) AS mh
-       |        FROM (SELECT doc_id, unnest(grams) AS shingle FROM lgrams))),
+       |        FROM (SELECT g.doc_id, unnest(g.grams) AS shingle FROM grams g))),
        |sig AS (
        |  SELECT doc_id, $minCols
        |  FROM hx GROUP BY doc_id),
@@ -2146,25 +2108,9 @@ object PipelineQueries {
       .distinct()
   }
 
-  /** Verified near-dup pairs (doc_a, doc_b, jaccard >= 0.5) — q43's body,
-    * shared with q52's clustering. Length-banded candidate join: the
-    * |n_chars diff| <= 20 predicate confines a match to the same or an
-    * adjacent 32-char bucket, so emitting the right side under its 3
-    * candidate buckets makes this a pure equi-join on (source, bucket) —
-    * linear in block size instead of quadratic per source, with an
-    * IDENTICAL result set (each qualifying pair matches exactly one key).
-    */
-  // The verified pair list itself is also memoized: q43, q52 and q99 each
-  // consume it, and the banded join + exploded-token intersection is
-  // ~2 s/consumer at sf0.1 while the result is a few hundred rows.
-  private val jaccardPairs = Memo.frame("jaccard_pairs") { (s, d) =>
-    jaccardPairsBuild(s, d).cache()
-  }
-
-  // Cached: several consumers (sizes, both token-join sides, the banded
-  // builder) would otherwise each recompute the shingle construction from
-  // scratch — Spark does not share work across join branches without
-  // explicit materialization. (~2KB/doc.)
+  // Cached: both Jaccard builders read it three times (sizes and the two
+  // token-join sides) — Spark does not share work across join branches
+  // without explicit materialization. (~2KB/doc.)
   private val gramFrame = Memo.frame("grams") { (s, d) =>
     fanOut(docsWithDups(s, d))
       .select(col("doc_id"), col("source"), col("n_chars"),
@@ -2172,27 +2118,20 @@ object PipelineQueries {
       .cache()
   }
 
-  private def jaccardPairsBuild(s: SparkSession, d: String): DataFrame = {
-    val docs = gramFrame(s, d)
-    // Candidate pairs carry only ids + set sizes (no arrays through the
-    // join): banded equi-join on (source, 32-char bucket) — |diff|<=20
-    // confines a match to the same or an adjacent bucket, so the 3-bucket
-    // fanout is exhaustive and each qualifying pair matches exactly once.
-    val sizes = docs.select(col("doc_id"), col("source"), col("n_chars"),
+  /** (doc_id, source, n_chars, g_sz): candidate pairs carry only ids and
+    * set sizes, no arrays through the join.
+    */
+  private def gramSizes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"), col("n_chars"),
       size(col("grams")).as("g_sz"))
-    val left = sizes.withColumn("bucket", (col("n_chars") / 32).cast("long"))
-    val right = sizes.withColumn("bucket",
-      explode(array(Seq(-1, 0, 1).map(o => (col("n_chars") / 32).cast("long") + o): _*)))
-    val cand = left.as("a").join(right.as("b"),
-        col("a.source") === col("b.source") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          abs(col("a.n_chars") - col("b.n_chars")) <= 20)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.g_sz").as("sz_a"), col("b.g_sz").as("sz_b"))
-    // Intersection sizes via token equi-joins (set-similarity join shape):
-    // per-pair array_intersect on string arrays is O(|A|·|B|) scans — 150µs
-    // per pair — while exploded tokens hash-join and count in bulk.
+
+  /** Exact verify of candidate pairs (doc_a, doc_b, sz_a, sz_b) against
+    * the gram frame: (doc_a, doc_b, jaccard >= 0.5). Intersection sizes
+    * via token equi-joins (set-similarity join shape): per-pair
+    * array_intersect on string arrays is O(|A|·|B|) scans — 150µs per
+    * pair — while exploded tokens hash-join and count in bulk.
+    */
+  private def verifyJaccard(cand: DataFrame, docs: DataFrame): DataFrame = {
     val tokens = docs.select(col("doc_id"), explode(col("grams")).as("gram"))
     val inter = cand
       .join(tokens.as("ta"), col("doc_a") === col("ta.doc_id"))
@@ -2207,14 +2146,39 @@ object PipelineQueries {
       .filter(col("jaccard") >= 0.5)
   }
 
+  /** Every near-dup pair (doc_a, doc_b, jaccard >= 0.5) — q99's exact
+    * truth side. Length-banded candidate join: the |n_chars diff| <= 20
+    * predicate confines a match to the same or an adjacent 32-char
+    * bucket, so emitting the right side under its 3 candidate buckets
+    * makes this a pure equi-join on (source, bucket) with an IDENTICAL
+    * result set (each qualifying pair matches exactly one key). A bucket
+    * still grows with the corpus, so candidates grow with its square:
+    * production dedup (q43/q52) uses [[bandedJaccardPairs]].
+    */
+  private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
+    val docs = gramFrame(s, d)
+    val sizes = gramSizes(docs)
+    val left = sizes.withColumn("bucket", (col("n_chars") / 32).cast("long"))
+    val right = sizes.withColumn("bucket",
+      explode(array(Seq(-1, 0, 1).map(o => (col("n_chars") / 32).cast("long") + o): _*)))
+    val cand = left.as("a").join(right.as("b"),
+        col("a.source") === col("b.source") &&
+          col("a.bucket") === col("b.bucket") &&
+          col("a.doc_id") < col("b.doc_id") &&
+          abs(col("a.n_chars") - col("b.n_chars")) <= 20)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.g_sz").as("sz_a"), col("b.g_sz").as("sz_b"))
+    verifyJaccard(cand, docs)
+  }
+
   // The production-shaped verified pair list: banded candidates -> exact
-  // verify (q43/q52 consume it; q99 keeps the exact builder as its
+  // verify (q43/q52/q126 consume it; q99 keeps the exact builder as its
   // independent truth side).
   private val bandedJaccardPairs = Memo.frame("jaccard_banded") { (s, d) =>
     bandedJaccardPairsBuild(s, d).cache()
   }
 
-  /** [[jaccardPairsBuild]] with the candidate stage routed through the
+  /** [[jaccardPairs]] with the candidate stage routed through the
     * MinHash band index instead of the length-bucket self-join: band
     * buckets are (min, min) hash-value pairs, near-uniform over the hash
     * modulus, so occupancy — and with it the candidate count — stays flat
@@ -2229,8 +2193,7 @@ object PipelineQueries {
     */
   private def bandedJaccardPairsBuild(s: SparkSession, d: String): DataFrame = {
     val docs = gramFrame(s, d)
-    val sizes = docs.select(col("doc_id"), col("source"), col("n_chars"),
-      size(col("grams")).as("g_sz"))
+    val sizes = gramSizes(docs)
     val cand = lshCandidates(s, d)
       .join(sizes.select(col("doc_id").as("doc_a"), col("source").as("src_a"),
         col("n_chars").as("nc_a"), col("g_sz").as("sz_a")), Seq("doc_a"))
@@ -2239,28 +2202,23 @@ object PipelineQueries {
       .filter(col("src_a") === col("src_b") &&
         abs(col("nc_a") - col("nc_b")) <= 20)
       .select("doc_a", "doc_b", "sz_a", "sz_b")
-    val tokens = docs.select(col("doc_id"), explode(col("grams")).as("gram"))
-    val inter = cand
-      .join(tokens.as("ta"), col("doc_a") === col("ta.doc_id"))
-      .join(tokens.as("tb"),
-        col("doc_b") === col("tb.doc_id") && col("ta.gram") === col("tb.gram"))
-      .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .select(col("doc_a"), col("doc_b"),
-        round(col("n_inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    verifyJaccard(cand, docs)
   }
+
+  /** `grams(doc_id, source, n_chars, grams)` ≡ [[gramFrame]] (expects
+    * docs2 in scope): each document's distinct word 3-grams.
+    */
+  private val gramsCte: String =
+    """grams AS (
+      |  SELECT doc_id, source, n_chars,
+      |         list_distinct([array_to_string(w[i:i+2], ' ')
+      |                        FOR i IN range(1, greatest(len(w) - 2, 0) + 1)]) AS grams
+      |  FROM (SELECT doc_id, source, n_chars, string_split(text, ' ') AS w FROM docs2))""".stripMargin
 
   /** CTE chain ending in `jpairs(doc_a, doc_b, jaccard)` ≡ [[jaccardPairs]]. */
   private val jaccardPairsCtes: String =
     s"""$docs2Cte,
-       |grams AS (
-       |  SELECT doc_id, source, n_chars,
-       |         list_distinct([array_to_string(w[i:i+2], ' ')
-       |                        FOR i IN range(1, greatest(len(w) - 2, 0) + 1)]) AS grams
-       |  FROM (SELECT doc_id, source, n_chars, string_split(text, ' ') AS w FROM docs2)),
+       |$gramsCte,
        |jpairs AS (
        |  SELECT doc_a, doc_b, jaccard FROM (
        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -2278,11 +2236,7 @@ object PipelineQueries {
     */
   private val bandedJaccardPairsCtes: String =
     s"""$docs2Cte,
-       |grams AS (
-       |  SELECT doc_id, source, n_chars,
-       |         list_distinct([array_to_string(w[i:i+2], ' ')
-       |                        FOR i IN range(1, greatest(len(w) - 2, 0) + 1)]) AS grams
-       |  FROM (SELECT doc_id, source, n_chars, string_split(text, ' ') AS w FROM docs2)),
+       |$gramsCte,
        |$lshBandCtes,
        |bcand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2639,6 +2593,7 @@ object PipelineQueries {
       "q41_minhash_lsh",
       (s, d) => lshCandidates(s, d),
       Some(s"""WITH $docs2Cte,
+              |$gramsCte,
               |$lshBandCtes
               |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
               |FROM bands a JOIN bands b
@@ -3868,6 +3823,7 @@ object PipelineQueries {
           .distinct()
       },
       Some(s"""WITH $docs2Cte,
+              |$gramsCte,
               |$lshBandCtes
               |SELECT DISTINCT a.doc_id AS corpus_id, b.doc_id AS new_id
               |FROM bands a JOIN bands b
@@ -3890,7 +3846,12 @@ object PipelineQueries {
         graft.functions.GraftFunctions.register(s)
         val e = embDupNorms(s, d)
         val cents = ivfCentroids(e)
-        val corpusCells = corpusCellIndex(s, d)
+        // The corpus side is the PERSISTED half of the incremental
+        // contract: its probe-1 home cells are read off the shared
+        // ranked pass, so a batch pays only its own assignment.
+        val corpusCells = embDupRankedFlat(s, d)
+          .filter(col("vec_id") < 100000 && col("arnk") === 1)
+          .select(col("vec_id").as("corpus_id"), col("label"), col("cid"))
         val newCells =
           cellAssignmentsDerived(e.filter(col("vec_id") >= 100000), cents)
             .select(col("vec_id").as("new_id"), col("label"), col("cid"))
@@ -3950,7 +3911,12 @@ object PipelineQueries {
           e.select(col("vec_id").as("node")), edges)
         val byCluster = Window.partitionBy("cluster_id")
           .orderBy(col("aff").desc, col("node").asc)
-        cc.join(embAffinity(s, d), Seq("node"))
+        // SemDeDup's keep criterion: each vector's cosine to its
+        // assigned (top-1) centroid, read off the shared ranked pass.
+        val affinity = embDupRankedFlat(s, d)
+          .filter(col("arnk") === 1)
+          .select(col("vec_id").as("node"), col("csim").cast("double").as("aff"))
+        cc.join(affinity, Seq("node"))
           .withColumn("rk", row_number().over(byCluster))
           .select(col("node").as("vec_id"), col("cluster_id"),
             (col("rk") === 1).as("is_kept"))

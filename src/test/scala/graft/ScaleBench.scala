@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: MEASURED scaling datapoint for BASELINE.md — runs the
@@ -56,17 +56,9 @@ object ScaleBench {
     val auditOnly = args.drop(1).contains("audit")
     val baseDir = "/root/testdata/sf0.1"
     val outDir = s"target/scaledata/x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir"))
+    // Scratch on disk: at 30x the shuffle and checkpoint blocks outgrow RAM.
+    val spark = GraftSession.builder("graft-scalebench",
+        "spark.local.dir" -> new java.io.File("target/scalebench-tmp").getAbsolutePath)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftFunctions.register(spark)
@@ -165,9 +157,7 @@ object ScaleBench {
       println(f"[scale] warm($dir): ${(System.nanoTime() - w0) / 1e9}%.1f s")
       selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        val df = fn(spark, dir)
-        df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-          .agg(expr("bit_xor(h)")).collect()
+        Bench.force(fn(spark, dir))
         val t = (System.nanoTime() - t0) / 1e9
         println(f"[scale] $dir $name%-28s $t%7.2f s")
         name -> t
