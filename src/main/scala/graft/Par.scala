@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *  - Nest-safe. Every task gets a thread at once from a cached daemon
   *    pool (an idle thread, else a new one), so the live threads are the
   *    sum of the fan-outs running now, never a pool size. A task that
-  *    itself calls [[all]] (a warm memo build reaching the cascade's pass
-  *    groups, say) cannot starve its own callers.
+  *    itself calls [[all]] (a warm memo build reaching the cascade fold,
+  *    say) cannot starve its own callers.
   *  - Context. Pool threads inherit no thread locals, so nothing stale
   *    from an earlier caller, `spark.sql.execution.id` included, reaches a
   *    task. A task runs with the caller's job group, description,

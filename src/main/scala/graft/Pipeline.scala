@@ -16,10 +16,12 @@ import org.apache.spark.sql.functions.col
   * `_SUCCESS` marker under `outDir/<stage>/<table>`; complete stages are
   * skipped wholesale (a partially-written stage — crash mid-stage —
   * re-runs whole, so no table can pair with a stale sibling). Writes are
-  * DETERMINISTIC (single file, rows fully sorted), so a re-run into a
-  * fresh directory produces byte-identical tables — the property that
-  * makes persisted artifacts diffable across runs and the resume
-  * semantics trustworthy.
+  * single-file with rows fully sorted, so every run produces the same
+  * ROWS in the same order — the property that makes persisted artifacts
+  * diffable across runs and the resume semantics trustworthy. Bytes are
+  * identical only within one session: across JVMs the parquet footer's
+  * per-column-chunk encoding lists can list the same encodings in a
+  * different order, so compare artifacts by rows, not by file hash.
   *
   * On a cluster the same runner writes multi-file tables (drop the
   * coalesce(1) via PipelineRunner.singleFile=false) — the skip logic
@@ -137,9 +139,8 @@ object Pipeline {
       if (!complete) tables.foreach { case (t, fn) =>
         val df = fn(spark, sfDir)
         // Deterministic artifact: one file, rows in full column order —
-        // byte-identical across runs on the same input (the spec pins
-        // this), so artifacts diff cleanly and downstream stages can
-        // cache-key on content.
+        // row-identical across runs on the same input, byte-identical
+        // within one session (the spec pins this); see the object doc.
         val out = if (singleFile) df.coalesce(1) else df
         out.sortWithinPartitions(df.columns.map(col): _*)
           .write.mode("overwrite").parquet(s"$outDir/$stage/$t")

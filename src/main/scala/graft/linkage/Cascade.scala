@@ -56,13 +56,32 @@ final case class LinkageConfig(
   * input record).
   *
   * Scale shape per pass: one shuffle join on the block keys + codegen'd
-  * scalar scoring + one window over rec_id. The accumulated-links anti-join
-  * is a shuffle on rec_id only. Nothing is collected to the driver.
+  * scalar scoring + one window over rec_id. The fold's first-pass window
+  * is a shuffle on rec_id over the link frames only. Nothing is collected
+  * to the driver.
   */
 object LinkageCascade {
 
   private def prefixed(df: DataFrame, p: String): DataFrame =
     df.select(df.columns.map(c => col(c).as(s"$p$c")): _*)
+
+  /** The input side as a pass sees it: `rightRemap` applied. */
+  private def remapped(input: DataFrame, pass: BlockingPass): DataFrame =
+    if (pass.rightRemap.isEmpty) input
+    else input.select(input.columns.map(c =>
+      col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
+
+  /** Per-block side counts of a pass: (block keys…, n_census, n_input)
+    * for every block key present on both sides; rows with a null block
+    * key are excluded exactly like the pass's equi-join excludes them.
+    */
+  private def blockSizes(census: DataFrame, input: DataFrame,
+      pass: BlockingPass): DataFrame = {
+    val keys = pass.blockKeys
+    def sized(df: DataFrame, n: String): DataFrame =
+      df.na.drop(keys).groupBy(keys.map(col): _*).agg(count(lit(1)).as(n))
+    sized(census, "n_census").join(sized(remapped(input, pass), "n_input"), keys)
+  }
 
   /** Candidate pairs for a pass: equi-join census × input on block keys.
     * When `salt > 1`, both sides get a salt column derived from the
@@ -71,12 +90,8 @@ object LinkageCascade {
     * the block key + a hash of the left row id (joined against all salts).
     */
   def pairs(census: DataFrame, input: DataFrame, pass: BlockingPass): DataFrame = {
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
     val l = prefixed(census, "l_")
-    val r = prefixed(right, "r_")
+    val r = prefixed(remapped(input, pass), "r_")
     val cond = pass.blockKeys.map(k => col(s"l_$k") === col(s"r_$k")).reduce(_ && _)
     if (pass.salt <= 1) l.join(r, cond)
     else {
@@ -139,115 +154,50 @@ object LinkageCascade {
         .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight")))
   }
 
-  /** Lookahead width of [[foldPasses]]'s overlapped execution: how many
-    * consecutive passes predict CONCURRENTLY over the same group-entry
-    * remainder before the anti-join chain is applied to their (tiny) link
-    * frames. 2-3 jobs in flight is the guide's §2.6 sweet spot — enough
-    * to back-fill the executor tail of one pass with the next pass's
-    * scan/join tasks, small enough that the within-group loss of anti-join
-    * pruning (a pass no longer skips the records its immediate
-    * predecessors in the SAME group link — bounded extra candidate
-    * scoring, exactly re-filtered afterwards) stays marginal.
-    */
-  val PassLookahead = 3
-
-  /** The cascade: passes run in order over the not-yet-linked remainder;
-    * links accumulate with the pass that produced them.
+  /** The cascade fold: passes run in order and a record keeps the link of
+    * the FIRST pass that links it (each pass skips what earlier passes
+    * linked).
     *
-    * Each pass's links are `localCheckpoint`ed (eager): the frame feeds BOTH
-    * the accumulator union and every later pass's anti-join, so without
-    * materialization pass 1's whole predict lineage is recomputed by each
-    * downstream consumer — at scale that multiplies the dominant join cost
-    * by the number of passes (the reference persists after each pass,
-    * df_ops.persist). The checkpointed links are tiny (ids + weight), so
-    * the later `remaining` anti-joins stay broadcast-sized and lineage
-    * stays shallow (input scan + one anti-join per completed pass).
-    *
-    * OVERLAPPED EXECUTION (guide §2.6 "overlap independent jobs"; round-19):
-    * passes are processed in groups of [[PassLookahead]]. Within a group
-    * every pass's predict runs over the GROUP-ENTRY remainder, submitted
-    * concurrently through [[graft.Par]], so one pass's straggler tail
-    * back-fills with the next pass's scan/join tasks instead of idling the
-    * executors — measured per-pass wall at sf0.1 was a near-constant
-    * ~1.3-2.4 s across all 15 passes even as the remainder shrank to a few
-    * percent, i.e. stage latency, not compute. Results are EXACTLY the
-    * sequential cascade's: records are independent through a pass (each
-    * record's candidates, threshold and best-link window condition only on
-    * its own rec_id — the property [[mainPasses]] documents and
-    * StreamingSpec pins), so predict(pass, r ∖ L) ≡ predict(pass, r)
-    * filtered to rec_id ∉ L; the within-group anti-join chain applies that
-    * filter to the concurrently-predicted link frames in pass order.
+    * Every pass predicts against the WHOLE input, all passes submitted at
+    * once through [[graft.Par]], each link frame tagged with its pass and
+    * ordinal and `localCheckpoint`ed (ids + weight, KB-scale); the fold
+    * then keeps, per rec_id, the row with the minimum ordinal. This is
+    * EXACTLY the sequential anti-join cascade: records are independent
+    * through a pass (each record's candidates, threshold and best-link
+    * window condition only on its own rec_id — the property
+    * [[mainPasses]] documents and StreamingSpec pins), so
+    * predict(pass, r ∖ L) ≡ predict(pass, r) filtered to rec_id ∉ L, and
+    * the minimum ordinal applies that filter for every pass at once. The
+    * price is that a pass scores the candidates of records an earlier
+    * pass already linked (q78's per-pass pair counts against the full
+    * input); the gain is no sequential barrier between passes, whose
+    * per-pass wall is stage latency, not compute. Separate `Par` tasks
+    * (not one union plan) keep the 13 plans' analysis concurrent too.
     */
-  private def foldPasses(
+  private[graft] def foldPasses(
       refs: Map[String, DataFrame],
       input: DataFrame,
       passes: Seq[BlockingPass],
-      cfg: LinkageConfig,
-      acc0: Option[DataFrame]): (Option[DataFrame], DataFrame) = {
-    // A trailing undersized group merges into its predecessor (13 passes →
-    // 3+3+3+4, not 3+3+3+3+1): one fewer sequential barrier, and the
-    // widened group sits LAST, where passes link the fewest records, so
-    // the extra within-group candidate work is smallest.
-    val grouped = {
-      val gs = passes.grouped(math.max(1, PassLookahead)).toSeq
-      if (gs.size > 1 && gs.last.size < PassLookahead)
-        gs.dropRight(2) :+ (gs(gs.size - 2) ++ gs.last)
-      else gs
-    }
-    grouped.foldLeft((acc0, input)) {
-      case ((acc, remaining), group) =>
-        // MEMORY_ONLY: the link frames are tiny (ids + weight) but the
-        // default MEMORY_AND_DISK localCheckpoint still writes blocks
-        // through the disk store — under I/O contention those writes
-        // stalled whole cascade runs (observed 2× swings at sf0.1).
-        // Caveat: a localCheckpoint has no lineage, so an EVICTED
-        // MEMORY_ONLY block is unrecoverable — safe here because the
-        // frames are KB-scale against GB-scale storage memory; anything
-        // bigger (addContiguousId's full-table checkpoint) keeps the
-        // disk-backed default.
-        val predicted: Seq[DataFrame] = Par.all(input.sparkSession, "cascade_group",
-          group.map { pass =>
-            pass.name -> { () =>
-              val census = refs.getOrElse(pass.ref, throw new IllegalArgumentException(
-                s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
-                  s"was given only ${refs.keys.mkString(", ")}"))
-              predict(census, remaining, pass, cfg)
-                .withColumn("pass", lit(pass.name))
-                .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-            }
-          })
-        // Within-group resolution IN PASS ORDER over the materialized
-        // frames: pass i keeps only records no earlier in-group pass
-        // linked (the cross-group exclusion already happened — every
-        // predict above read the group-entry remainder).
-        val resolved = predicted.foldLeft(Seq.empty[DataFrame]) {
-          case (done, pl) =>
-            val filtered = done.foldLeft(pl) { (df, earlier) =>
-              df.join(earlier.select("rec_id"), Seq("rec_id"), "left_anti")
-            }
-            done :+ filtered
+      cfg: LinkageConfig): DataFrame = {
+    val predicted = Par.all(input.sparkSession, "cascade",
+      passes.zipWithIndex.map { case (pass, ordinal) =>
+        pass.name -> { () =>
+          val census = refs.getOrElse(pass.ref, throw new IllegalArgumentException(
+            s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
+              s"was given only ${refs.keys.mkString(", ")}"))
+          predict(census, input, pass, cfg)
+            .withColumn("pass", lit(pass.name))
+            .withColumn("ordinal", lit(ordinal))
+            .localCheckpoint()
         }
-        val nextAcc = resolved.foldLeft(acc) { (a, links) =>
-          Some(a.fold(links)(_.unionByName(links)))
-        }
-        val nextRemaining = resolved.foldLeft(remaining) { (rem, links) =>
-          rem.join(links.select("rec_id"), Seq("rec_id"), "left_anti")
-        }
-        (nextAcc, nextRemaining)
-    }
+      })
+    predicted.reduce(_ unionByName _)
+      .withColumn("first", row_number().over(
+        Window.partitionBy("rec_id").orderBy("ordinal")))
+      .filter(col("first") === 1)
+      .drop("first", "ordinal")
   }
 
-  /** The hhcompsearch reference file (reference cells 126-138): bridge each
-    * input-side pseudo-household (its `geokey_blk`) through its already-
-    * linked members' PIKs to the census-side addresses of those PIKs, then
-    * take the UNLINKED census records at those addresses, tagged with the
-    * input household key they are candidates for. GQ records never enter
-    * (their geokey_blk is NULL — the reference excludes GQ "so it isn't
-    * used ... nor for HHCompSearch").
-    *
-    * Scale shape: the bridge is two equi-joins over the (small) link set;
-    * the candidate join is an equi-join on geokey. No cross products.
-    */
   /** Per-block cost report for a pass: each block key's side counts and
     * the implied candidate-pair count, heaviest first — the pre-flight
     * that decides which passes need `salt` (or a blocking redesign)
@@ -257,21 +207,11 @@ object LinkageCascade {
     * excludes them.
     */
   def blockSkewReport(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      topN: Int = 20): DataFrame = {
-    val keys = pass.blockKeys
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
-    val l = census.na.drop(keys)
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_census"))
-    val r = right.na.drop(keys)
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_input"))
-    l.join(r, keys)
+      topN: Int = 20): DataFrame =
+    blockSizes(census, input, pass)
       .withColumn("n_pairs", col("n_census") * col("n_input"))
-      .orderBy((col("n_pairs").desc +: keys.map(col(_).asc)): _*)
+      .orderBy((col("n_pairs").desc +: pass.blockKeys.map(col(_).asc)): _*)
       .limit(topN)
-  }
 
   /** One-row whole-pass cost summary: total candidate pairs the pass
     * would generate against the full input, block count, and the largest
@@ -281,23 +221,13 @@ object LinkageCascade {
     * compare max_block_pairs against what one reducer can score.
     */
   def blockCostSummary(census: DataFrame, input: DataFrame,
-      pass: BlockingPass): DataFrame = {
-    val keys = pass.blockKeys
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
-    val l = census.na.drop(keys)
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_census"))
-    val r = right.na.drop(keys)
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_input"))
-    l.join(r, keys)
+      pass: BlockingPass): DataFrame =
+    blockSizes(census, input, pass)
       .select((col("n_census") * col("n_input")).as("n_pairs"))
       .agg(
         coalesce(sum("n_pairs"), lit(0L)).as("n_pairs"),
         count(lit(1)).as("n_blocks"),
         coalesce(max("n_pairs"), lit(0L)).as("max_block_pairs"))
-  }
 
   /** [[blockCostSummary]] for a whole cascade in ONE scan and ONE
     * shuffle per side: each row emits an array entry per pass whose block
@@ -407,6 +337,17 @@ object LinkageCascade {
     }
   }
 
+  /** The hhcompsearch reference file (reference cells 126-138): bridge each
+    * input-side pseudo-household (its `geokey_blk`) through its already-
+    * linked members' PIKs to the census-side addresses of those PIKs, then
+    * take the UNLINKED census records at those addresses, tagged with the
+    * input household key they are candidates for. GQ records never enter
+    * (their geokey_blk is NULL — the reference excludes GQ "so it isn't
+    * used ... nor for HHCompSearch").
+    *
+    * Scale shape: the bridge is two equi-joins over the (small) link set;
+    * the candidate join is an equi-join on geokey. No cross products.
+    */
   def hhcompReference(census: DataFrame, input: DataFrame, links: DataFrame): DataFrame = {
     val bridge = links.select("pik", "rec_id")
       .join(
@@ -458,25 +399,25 @@ object LinkageCascade {
     val r = cached.map { case (name, (df, _)) => name -> df }
     val iPersisted = input.storageLevel != StorageLevel.NONE
     val i = if (iPersisted) input else input.cache()
-    val links = hhStage(r, i, mainPasses(r, i, cfg)._1, cfg)
+    // Materialized once: the hh bridge, the hh remainder's anti-join and
+    // the final union all read the main links.
+    val links = hhStage(r, i, mainPasses(r, i, cfg).localCheckpoint(), cfg)
     cached.foreach { case (_, (df, persisted)) => if (!persisted) df.unpersist() }
     if (!iPersisted) i.unpersist()
     links
   }
 
   /** The 13 main search modules alone: fold the non-household passes over
-    * `input`, returning (accumulated links, unlinked remainder). Records
-    * are INDEPENDENT through this stage — a pass's candidates, threshold
-    * and best-link window all condition on the record's own rec_id — so
-    * running it over any partition of the input and unioning equals
-    * running it over the whole input (the property the streaming cascade's
-    * micro-batch replay parity rests on; StreamingSpec pins it).
+    * `input`, returning the links. Records are INDEPENDENT through this
+    * stage — a pass's candidates, threshold and best-link window all
+    * condition on the record's own rec_id — so running it over any
+    * partition of the input and unioning equals running it over the whole
+    * input (the property [[foldPasses]] and the streaming cascade's
+    * micro-batch replay parity rest on; StreamingSpec pins it).
     */
   def mainPasses(refs: Map[String, DataFrame], input: DataFrame,
-      cfg: LinkageConfig): (DataFrame, DataFrame) = {
-    val (links, remaining) = foldPasses(refs, input, cfg.passes, cfg, None)
-    (links.get, remaining)
-  }
+      cfg: LinkageConfig): DataFrame =
+    foldPasses(refs, input, cfg.passes, cfg)
 
   /** The hhcompsearch finalization: build the household-composition
     * reference from ALL main-stage links (the bridge needs the global link
@@ -488,13 +429,12 @@ object LinkageCascade {
       mainLinks: DataFrame, cfg: LinkageConfig): DataFrame =
     if (cfg.hhPasses.isEmpty) mainLinks
     else {
-      val hhRef = hhcompReference(refs("census"), input, mainLinks)
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      val remaining = input
+      val hhRef = hhcompReference(refs("census"), input, mainLinks).localCheckpoint()
+      val rem = input
         .join(mainLinks.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
-      val rem = remaining.withColumn("hh_geokey", col("geokey_blk"))
+        .withColumn("hh_geokey", col("geokey_blk"))
       val hhRefs = cfg.hhPasses.map(_.ref).toSet.map((n: String) => n -> hhRef).toMap
-      foldPasses(hhRefs, rem, cfg.hhPasses, cfg, Some(mainLinks))._1.get
+      mainLinks.unionByName(foldPasses(hhRefs, rem, cfg.hhPasses, cfg))
     }
 
   /** Post-search confirm (reference "post-search confirm" cells): drop
@@ -745,9 +685,7 @@ object LinkageCascade {
     // and iteration loop), so they submit their Spark jobs CONCURRENTLY —
     // wall-clock is the slowest session, not the sum. Results stay
     // deterministic: Par.all returns results in pass order and each
-    // session's math is self-contained. (The cascade's passes, by
-    // contrast, are inherently sequential — later passes must not see
-    // records earlier passes linked.)
+    // session's math is self-contained.
     val sessions: Seq[(Set[String], Map[(String, Int), Double], EmSessionReport)] =
       Par.all(input.sparkSession, "em_sessions", trainingPasses.map { p =>
         p.name -> { () =>

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Deterministic in-corpus byte-pair-encoding tokenizer (Sennrich et al.
   * 2016 shape, word-internal): train a fixed number of merges on the
-  * corpus word-TYPE table (pair-count aggregate per iteration — the EM
-  * loop pattern: the driver holds only the bounded merge list), then
-  * encode any text by replaying the merges as one nested-replace
-  * projection. Token-budget operators (q82 packing) count REAL subword
-  * tokens instead of whitespace/char proxies.
+  * corpus word-TYPE table (collected once; the merge loop runs on the
+  * driver, the EM loop pattern), then encode any text by replaying the
+  * merges as one nested-replace projection. Token-budget operators (q82
+  * packing) count REAL subword tokens instead of whitespace/char proxies.
   *
   * Representation: a word's symbol sequence renders as a delimited string
   * `⟨s1⟩⟨s2⟩…` (⟨ = , ⟩ = , both outside the [a-z] symbol
@@ -23,9 +22,9 @@ import org.apache.spark.sql.functions._
   * token count, is reproducible at any partitioning and any scale.
   *
   * Scale shape: training touches only the word-type table (vocabulary-
-  * sized, ≪ corpus) — one pair-count hash aggregate + one 1-row argmax
-  * per merge; encoding is the broadcast word→token-count dimension
-  * joined back to the corpus explode. Nothing quadratic, no global sort.
+  * sized, ≪ corpus), collected once; the merges run on the driver.
+  * Encoding is the broadcast word→token-count dimension joined back to
+  * the corpus explode. Nothing quadratic, no global sort.
   */
 object Bpe {
 
@@ -43,10 +42,6 @@ object Bpe {
   def initRepr(word: Column): Column =
     regexp_replace(word, "(.)", s"$L$$1$R")
 
-  /** Symbol array of a repr (inverse of the delimited rendering). */
-  private def symsOf(repr: Column): Column =
-    split(trim(repr, L + R), R + L)
-
   /** Replay an ordered merge list over a repr — ONE nested-replace
     * projection, no per-merge pass over the data.
     */
@@ -63,78 +58,52 @@ object Bpe {
     docs.select(col("doc_id"),
       explode(expr("regexp_extract_all(lower(text), '([a-z]+)', 1)")).as("word"))
 
-  /** Train `m` merges on the corpus word-type table. Driver state: the
-    * merge list (bounded by m). Per iteration: one pair-count hash
-    * aggregate over the vocabulary + a 1-row argmax collect; the
-    * evolving repr column re-materializes through an explicitly managed
-    * persisted RDD (plan truncation like localCheckpoint, the EM/CC
-    * idiom) and THE SUPERSEDED ITERATION'S STORAGE IS RELEASED as soon
-    * as its successor is materialized — at most 2 word-type copies live
-    * transiently, ≤ 1 between iterations, at ANY merge count. (The
-    * earlier localCheckpoint form never released predecessors: invisible
-    * at the 16-merge demo, but a production 10⁴-merge vocabulary would
-    * have kept 10⁴ live copies of the table in executor storage.) Stops
-    * early when no pair remains (fully merged vocabulary) — the oracle's
-    * sentinel no-op merges are equivalent.
+  /** Train `m` merges on the corpus word-type table. One Spark job
+    * collects the (word, freq) type table (vocabulary-sized); the merge
+    * loop then runs on the driver, the way [[graft.linkage.LinkageCascade]]
+    * runs EM over a gamma-pattern histogram. Pair counts (adjacent symbol
+    * pairs weighted by word frequency) are kept incrementally: a merge
+    * re-counts only the words it rewrites. The argmax orders by (count
+    * DESC, a ASC, b ASC) — [a-z] symbols order the same as UTF-8 bytes —
+    * and a merge is the non-overlapping left-to-right replace that
+    * [[applyMerges]] and the oracle chain perform. Stops early when no
+    * pair remains (fully merged vocabulary) — the oracle's sentinel no-op
+    * merges are equivalent.
     */
   def trainMerges(docs: DataFrame, m: Int = NumMerges): Seq[(String, String)] = {
-    val spark = docs.sparkSession
-    trainPeakLive.set(0)
-    var live: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    var nLive = 0
-    // Materialize through a LOCALLY-CHECKPOINTED Row RDD + createDataFrame:
-    // the rebuilt frame's plan is a bare RDD scan (no Catalyst lineage
-    // growth), the checkpoint TRUNCATES the RDD dependency graph after the
-    // first action (plain persist() does not — 10⁴ chained iteration RDDs
-    // overflowed task serialization at merge ~10³, caught by ScaleBench's
-    // 1024-merge run), and unlike Dataset.localCheckpoint the RDD handle
-    // is OURS to release the moment the next iteration lands.
-    def materialize(df: DataFrame): DataFrame = {
-      val rdd = df.rdd
-      rdd.localCheckpoint()
-      rdd.count() // materialize + truncate BEFORE releasing the input
-      nLive += 1
-      trainPeakLive.set(math.max(trainPeakLive.get, nLive))
-      live.foreach { prev => prev.unpersist(blocking = false); nLive -= 1 }
-      live = Some(rdd)
-      spark.createDataFrame(rdd, df.schema)
-    }
-    val wt = wordsOf(docs).groupBy("word").agg(count(lit(1)).as("freq"))
-    var wtR = materialize(wt.withColumn("repr", initRepr(col("word"))))
+    val types = wordsOf(docs).groupBy("word").agg(count(lit(1)).as("freq"))
+      .collect().map(r => (r.getString(0).map(_.toString).toArray, r.getLong(1)))
+    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    def tally(syms: Array[String], freq: Long): Unit =
+      syms.iterator.zip(syms.iterator.drop(1)).foreach { p =>
+        val n = counts.getOrElse(p, 0L) + freq
+        if (n == 0L) counts.remove(p) else counts.update(p, n)
+      }
+    types.foreach { case (syms, freq) => tally(syms, freq) }
     val merges = Seq.newBuilder[(String, String)]
-    var done = false
     var i = 0
-    while (i < m && !done) {
-      val best = wtR
-        .select(col("freq"), symsOf(col("repr")).as("syms"))
-        .select(col("freq"), explode(transform(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          (x, j) => struct(x.as("a"),
-            element_at(col("syms"), (j + 2).cast("int")).as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val a = best(0).getString(0)
-        val b = best(0).getString(1)
-        merges += ((a, b))
-        wtR = materialize(wtR.withColumn("repr", mergeOnce(col("repr"), a, b)))
+    while (i < m && counts.nonEmpty) {
+      val ((a, b), _) = counts.minBy { case ((x, y), n) => (-n, x, y) }
+      merges += ((a, b))
+      types.indices.foreach { t =>
+        val (syms, freq) = types(t)
+        def pairAt(j: Int) = j + 1 < syms.length && syms(j) == a && syms(j + 1) == b
+        if (syms.indices.exists(pairAt)) {
+          val out = Array.newBuilder[String]
+          var j = 0
+          while (j < syms.length) {
+            if (pairAt(j)) { out += a + b; j += 2 } else { out += syms(j); j += 1 }
+          }
+          val merged = out.result()
+          tally(syms, -freq)
+          tally(merged, freq)
+          types(t) = (merged, freq)
+        }
       }
       i += 1
     }
-    // The final word-type frame is training scratch too — trainMerges
-    // returns only the merge list, so nothing may stay pinned behind it.
-    live.foreach(_.unpersist(blocking = false))
     merges.result()
   }
-
-  /** Peak simultaneously-live training RDDs of the LAST [[trainMerges]]
-    * run (spec hook: must stay ≤ 2 — the new checkpoint plus the
-    * predecessor it is built from, released immediately after).
-    */
-  private[graft] val trainPeakLive = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def mergeOnce(repr: Column, a: String, b: String): Column =
     overlay_replace(repr, s"$L$a$R$L$b$R", s"$L$a$b$R")

@@ -1526,19 +1526,16 @@ object LinkageQueries {
 
   private def reg(s: SparkSession): Unit = GraftFunctions.register(s)
 
-  /** q32/q33/q36/q37 all need the full cascade; its per-pass links are
-    * already localCheckpointed, so memoizing the assembled frame per
-    * (session, dir) means every consumer reuses the materialized links
-    * instead of re-running the predict passes.
+  /** q32/q33/q36/q37 all need the full cascade, so the assembled link set
+    * is memoized per (session, dir) and every consumer reuses the
+    * materialized links instead of re-running the predict passes.
     */
   private val cascadeLinks = Memo.frame("cascade_links") { (s, d) =>
-    // Checkpoint the ASSEMBLED link set once: with the overlapped
-    // cascade, per-pass links are checkpointed but the within-group
-    // anti-join resolution on top of them is lazy, and every memo
-    // consumer (q32/q33/q36/q37/q39/q83/q84/q112…) re-executed those
-    // ~13 small joins per query (measured +0.3-0.4 s each). One
-    // KB-scale materialization here gives consumers a single
-    // LogicalRDD, like the pre-overlap shape. The default storage level
+    // Checkpoint the ASSEMBLED link set once: the per-pass links are
+    // checkpointed, but the fold's first-pass window and the hh union on
+    // top of them are lazy, and every memo consumer (q32/q33/q36/q37/q39/
+    // q83/q84/q112…) would re-run them. One KB-scale materialization
+    // gives consumers a single LogicalRDD. The default storage level
     // spills to disk: lineage is cut, so a block evicted from memory
     // would otherwise fail every consumer.
     LinkageCascade.run(cascadeRefs(s, d), input(s, d), config).localCheckpoint()
@@ -2789,34 +2786,12 @@ object LinkageQueries {
       "q129_zip3_adjacency",
       (s, d) => {
         reg(s)
-        val links = cascadeLinks(s, d)
-        // Materialized: rem feeds pass 1's predict, pass 2's remainder
-        // derivation AND (via rem2) pass 2's predict; l1 feeds both the
-        // pass-2 anti-join and the final union — without the barriers
-        // each consumer re-runs the anti-join / the whole pass-1 predict
-        // (the foldPasses checkpoint discipline, applied to this manual
-        // two-pass chain). l1 is ids + weight; rem is the small
-        // post-cascade residue.
+        // zip3Adjacent is a row-local explode, so the two passes fold over
+        // the exploded remainder like any other cascade passes.
         val rem = input(s, d)
-          .join(links.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
-          .localCheckpoint()
-        val ref = geobase(s, d)
-        val z1 = zip3AdjPasses(0)
-        val z2 = zip3AdjPasses(1)
-        // Both passes predict CONCURRENTLY over the same checkpointed
-        // remainder (the foldPasses lookahead shape, guide §2.6): records
-        // are independent within a pass and zip3Adjacent is a row-local
-        // explode, so predict(ref, zip3Adjacent(rem ∖ L1), z2) ≡
-        // predict(ref, zip3Adjacent(rem), z2) filtered to rec_id ∉ L1 —
-        // the anti-join below applies that filter to the materialized
-        // KB-scale link frames, links identical (oracle green).
-        val zadj = LinkageCascade.zip3Adjacent(rem)
-        val Seq(l1, l2) = Par.all(s, "q129_zip3_adjacent", Seq(z1, z2).map { z =>
-          z.name -> (() => LinkageCascade.predict(ref, zadj, z, config)
-            .withColumn("pass", lit(z.name))
-            .localCheckpoint())
-        })
-        l1.unionByName(l2.join(l1.select("rec_id"), Seq("rec_id"), "left_anti"))
+          .join(cascadeLinks(s, d).select("rec_id").distinct(), Seq("rec_id"), "left_anti")
+        LinkageCascade.foldPasses(Map("geobase" -> geobase(s, d)),
+            LinkageCascade.zip3Adjacent(rem), zip3AdjPasses, config)
           .select(col("pik"), col("rec_id"),
             round(col("match_weight"), 6).as("mw"), col("pass"))
       },

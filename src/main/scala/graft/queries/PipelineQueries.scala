@@ -965,43 +965,6 @@ object PipelineQueries {
       .select("vec_id", "label", "cid")
   }
 
-  /** TWO-LEVEL (hierarchical) probe-cell assignment — the scale ladder
-    * past flat IVF's n×k assignment dots: vectors rank against 16 COARSE
-    * centroids (stride n/16 over the same id arithmetic), then against
-    * only the fine centroids whose own top-1 coarse cell is among the
-    * vector's top-`coarseProbes` — n×(16 + coarseProbes·k/16) expected
-    * dots. Rows stay slim through every shuffle: the per-vector fine
-    * candidate list attaches to the embedding ONCE (join by vec_id),
-    * explodes map-side, scores against the BROADCAST fine set, and only
-    * (vec_id, label, cid, csim) reaches the ranking window. Same output
-    * shape as [[cellAssignments]]; the two can differ on vectors whose
-    * best fine cell hides in a far coarse cell — PipelineQueriesSpec
-    * pins zero pair loss at the test SFs with coarseProbes = 2.
-    *
-    * MEASURED VERDICT (BASELINE.md, round 14): at 10× (k≈160), coarseProbes 2/3/4
-    * miss 19/11/7 of 1000 true pairs at 1.4×/1.8×/2.4× the flat stage's
-    * wall. At 30× (k≈484) the wall ordering flips (flat's n·k term
-    * dominates: cp2 runs 96 s vs flat-p3's 99 s) but the stride-picked
-    * coarse level loses far more recall (324/163/144 of 4408) than the
-    * TRAINED coarse level at equal probes ([[trainedCellAssignments]]:
-    * 241/150/112) — the stride pseudo-centroids do not partition the
-    * fine set coherently. The production queries keep FLAT assignment
-    * with corpus-derived k and corpus-derived PROBES
-    * ([[cellAssignmentsDerived]], 0 loss at both measured points); the
-    * trained ladder is the measured speed path at larger n, gated by the
-    * same recall audit.
-    */
-  def hierarchicalCellAssignments(e: DataFrame, fine: DataFrame,
-      coarseProbes: Int, fineProbes: Int): DataFrame = {
-    val coarseParams = e.agg(count(lit(1)).as("n")).select(
-      greatest(lit(1L), (col("n") / lit(16)).cast("long")).as("stride"))
-    val coarse = e.crossJoin(broadcast(coarseParams))
-      .filter(pmod(col("vec_id"), col("stride")) === pmod(lit(3L), col("stride")))
-      .select(col("vec_id").as("ccid"), col("embedding").as("cce"),
-        col("nrm").as("ccn"))
-    twoLevelAssignments(e, fine, coarse, coarseProbes, fineProbes)
-  }
-
   /** Coarse-level centroids TRAINED with spherical k-means over the fine
     * centroid set (hierarchical k-means: the coarse level clusters the k
     * fine centroids, never the n raw vectors, so training costs

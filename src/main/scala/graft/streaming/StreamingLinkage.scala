@@ -74,7 +74,7 @@ object StreamingLinkage {
       priorLinks: DataFrame, cfg: LinkageConfig): DataFrame = {
     val fresh = arrivals.join(
       priorLinks.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
-    LinkageCascade.mainPasses(refs, fresh, cfg)._1
+    LinkageCascade.mainPasses(refs, fresh, cfg)
   }
 
   /** Stream-end (or periodic) hhcompsearch finalization: the household
@@ -149,15 +149,8 @@ object StreamingLinkage {
       census, allArrivals, links, cfg, moversPass)
     val rem = allArrivals.join(
       links.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
-    val z1 = zip3Passes.head
-    val l1 = LinkageCascade.predict(geoRef,
-        LinkageCascade.zip3Adjacent(rem, zip3Dim), z1, cfg)
-      .withColumn("pass", lit(z1.name)).localCheckpoint()
-    val rem2 = rem.join(l1.select("rec_id"), Seq("rec_id"), "left_anti")
-    val z2 = zip3Passes(1)
-    val l2 = LinkageCascade.predict(geoRef,
-        LinkageCascade.zip3Adjacent(rem2, zip3Dim), z2, cfg)
-      .withColumn("pass", lit(z2.name))
+    val zip3Links = LinkageCascade.foldPasses(zip3Passes.map(_.ref -> geoRef).toMap,
+      LinkageCascade.zip3Adjacent(rem, zip3Dim), zip3Passes, cfg)
     def withMaf(side: DataFrame): DataFrame =
       side.join(maf,
         regexp_replace(side("geokey"), "\\|[^|]*$", "") === maf("maf_key"))
@@ -165,8 +158,8 @@ object StreamingLinkage {
     val mafLinks = LinkageCascade.predict(
         withMaf(census), withMaf(allArrivals), mafPass, cfg)
       .withColumn("pass", lit(mafPass.name))
-    slim(links).unionByName(slim(movers)).unionByName(slim(l1))
-      .unionByName(slim(l2)).unionByName(slim(mafLinks))
+    slim(links).unionByName(slim(movers)).unionByName(slim(zip3Links))
+      .unionByName(slim(mafLinks))
   }
 
   /** q39-style per-pass accounting over the streamed links — the same

@@ -3,6 +3,7 @@ package graft
 import graft.functions.GraftFunctions
 import graft.linkage._
 import graft.queries.LinkageQueries
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class LinkageSpec extends SparkTestBase {
@@ -39,6 +40,50 @@ class LinkageSpec extends SparkTestBase {
     links.unpersist()
     assert(nCorrect / nLinks > 0.9, s"precision ${nCorrect / nLinks}")
     assert(nCorrect / nTrue > 0.9, s"recall ${nCorrect / nTrue}")
+  }
+
+  test("concurrent cascade fold equals the sequential anti-join cascade") {
+    import spark.implicits._
+    // Three passes blocking on k1, k2, k3; one exact-name comparison, so
+    // a candidate passes the threshold iff its name agrees.
+    //  - rec 10: pass 1 ties two distinct PIKs (dropped), pass 2 links pik 2;
+    //  - rec 20: pass 1 links pik 3, pass 3 would link pik 4;
+    //  - rec 30: two input rows (a nickname expansion), pass 1 links pik 5
+    //    through one row, pass 3 would link pik 6 through the other;
+    //  - rec 40: only pass 3 links it; rec 50 is never linked.
+    val cen = Seq[(Long, Option[String], Option[String], Option[String], String)](
+      (1L, Some("a"), Some("x1"), None, "ann"),
+      (2L, Some("a"), Some("x2"), None, "ann"),
+      (3L, Some("b"), None, Some("c3"), "bob"),
+      (4L, Some("r"), None, Some("c"), "bob"),
+      (5L, Some("d"), None, Some("e2"), "daniel"),
+      (6L, None, None, Some("e"), "dan"),
+      (7L, None, None, Some("f"), "eve")).toDF("pik", "k1", "k2", "k3", "name")
+    val inp = Seq[(Long, Option[String], Option[String], Option[String], String)](
+      (10L, Some("a"), Some("x2"), None, "ann"),
+      (20L, Some("b"), None, Some("c"), "bob"),
+      (30L, Some("d"), None, Some("e"), "dan"),
+      (30L, Some("d"), None, Some("e"), "daniel"),
+      (40L, None, None, Some("f"), "eve"),
+      (50L, Some("a"), None, None, "zed")).toDF("rec_id", "k1", "k2", "k3", "name")
+    val passes = Seq("k1", "k2", "k3").map(k => BlockingPass(s"p_$k", Seq(k)))
+    val fixture = LinkageConfig(
+      Seq(Comparison("name", "name", Seq(ComparisonLevel(ExactMatch, 0.9, 0.1)), 0.1, 0.9)),
+      lambda = 0.01, thresholdWeight = 0.0, passes = passes)
+    val sequential = passes.foldLeft((Option.empty[DataFrame], inp)) {
+      case ((acc, rem), p) =>
+        val l = LinkageCascade.predict(cen, rem, p, fixture)
+          .withColumn("pass", lit(p.name)).localCheckpoint()
+        (Some(acc.fold(l)(_.unionByName(l))),
+          rem.join(l.select("rec_id"), Seq("rec_id"), "left_anti"))
+    }._1.get
+    def keyed(df: DataFrame): Set[(Long, Long, String, Double)] =
+      df.select("pik", "rec_id", "pass", "match_weight").as[(Long, Long, String, Double)]
+        .collect().toSet
+    val folded = keyed(LinkageCascade.run(cen, inp, fixture))
+    assert(folded == keyed(sequential))
+    assert(folded.map(t => (t._1, t._2, t._3)) ==
+      Set((2L, 10L, "p_k2"), (3L, 20L, "p_k1"), (5L, 30L, "p_k1"), (7L, 40L, "p_k3")))
   }
 
   test("salted blocking produces exactly the same pairs as unsalted") {

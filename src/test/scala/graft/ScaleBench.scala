@@ -193,51 +193,8 @@ object ScaleBench {
       }
     }
 
-    // Since round 12 the q51/q68 index granularity SELF-SCALES (k =
-    // max(16, n/128) derived in-query from the corpus count), so the main
-    // table's q51/q68 rows already measure the deployment configuration —
-    // no manual k override. The sweep below isolates the celled-dedup
-    // shape at explicit k values to show the occupancy-vs-k tradeoff the
-    // derivation encodes (k=16 fixed → occupancy grows 10×; derived k →
-    // occupancy pinned ~128).
     import graft.operators.VectorOps
     import graft.queries.PipelineQueries
-    import org.apache.spark.sql.expressions.Window
-    def celledDedupSec(dir: String, k: Int): Double = {
-      val t0 = System.nanoTime()
-      val e = PipelineQueries.embWithDups(spark, dir)
-        .withColumn("nrm", VectorOps.norm(col("embedding"))).cache()
-      e.count()
-      val seedIds = (0 until k).map(i => i.toLong * 97 + 3)
-      val cents = e.filter(col("vec_id").isin(seedIds: _*))
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cid").asc)
-      val assign = e.select("vec_id", "label", "embedding", "nrm")
-        .crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("label"),
-          (VectorOps.dotDecimal(col("embedding"), col("ce")) /
-            (col("nrm") * col("cn"))).as("csim"), col("cid"))
-        .withColumn("arnk", row_number().over(byVec))
-        .filter(col("arnk") <= 3) // mirrors q51's probe-3 dedup candidates
-        .select("vec_id", "label", "cid")
-      val cand = assign.as("a").join(assign.as("b"),
-          col("a.label") === col("b.label") && col("a.cid") === col("b.cid") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-        .distinct()
-      val ea = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na"))
-      val eb = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("nrm").as("nb"))
-      val naNb = col("na") * col("nb")
-      val fastOk = VectorOps.dotFast(col("ea"), col("eb")) >= (lit(0.9) - lit(1e-6)) * naNb
-      val exactCos = VectorOps.dotDecimal(col("ea"), col("eb")) / naNb
-      val n = cand.join(ea, Seq("vec_a")).join(eb, Seq("vec_b"))
-        .filter(when(fastOk, exactCos >= 0.9).otherwise(lit(false)))
-        .count()
-      e.unpersist()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] celled dedup $dir k=$k%-4d pairs=$n $t%7.2f s")
-      t
-    }
     // Pair-set parity audit at the scaled dir: the celled candidates must
     // reproduce the exact label-join pair set at 10× too, not only at the
     // spec's test SF (timing alone can hide recall loss). Fast-double
@@ -451,11 +408,9 @@ object ScaleBench {
     }
     imageAudits(outDir)
 
-    // Production-merge BPE hygiene measurement (10× runs only, so the
-    // 30×/100× exponent runs aren't charged for it): train 1024 merges
-    // on the scaled corpus and report wall-clock + peak live training
-    // RDDs. The pre-round-16 localCheckpoint leak would have pinned
-    // ~1024 live word-type copies here; the hygiene contract is ≤ 2.
+    // Production-merge BPE measurement (10× runs only, so the 30×/100×
+    // exponent runs aren't charged for it): train 1024 merges on the
+    // scaled corpus and report wall-clock.
     if (!auditOnly && factor == 10) {
       import graft.operators.Bpe
       val scaledDocs = spark.read.parquet(s"$outDir/documents.parquet")
@@ -467,8 +422,8 @@ object ScaleBench {
       // DIVERSITY, so the measured corpus is the 10× docs PLUS a
       // deterministic 100k-word-type tail (base-26 id renderings, 50
       // types per doc) — the vocabulary-bounded merge loop then runs at
-      // its real production cost shape: every pair-count aggregate scans
-      // ~100k word types, the corpus rows are touched only by type
+      // its real production cost shape: the driver-side merge loop runs
+      // over ~100k word types, the corpus rows are touched only by type
       // extraction.
       val vocabTail = spark.range(2000).select(
         (col("id") + 10000000L).as("doc_id"),
@@ -482,14 +437,12 @@ object ScaleBench {
       val merges = Bpe.trainMerges(bpeDocs, m = 1024)
       val t = (System.nanoTime() - t0) / 1e9
       println(f"[scale] bpe 1024-merge training at 10x (+100k-type vocab tail): " +
-        f"merges=${merges.size} peakLiveRdds=${Bpe.trainPeakLive.get} $t%.1f s")
+        f"merges=${merges.size} $t%.1f s")
     }
 
-    // Hierarchical vs flat assignment at the scaled dir: wall time of the
-    // probe-3 cell-assignment stage alone (the n·k flat term vs the
-    // two-level n·(16 + k/8) ladder) and the candidate-pair recall of
-    // each against the exact set — the measured evidence for the
-    // "ladder beyond this window" claim in BASELINE.md.
+    // Recall audit of the adopted trained two-level assignment at the
+    // scaled dir: its candidate pairs against the exact set, plus the
+    // candidate stage's wall time.
     def assignSec(dir: String): Unit = {
       val e = PipelineQueries.embWithDups(spark, dir)
         .withColumn("nrm", VectorOps.norm(col("embedding"))).cache()
@@ -524,36 +477,19 @@ object ScaleBench {
       // jitter distribution.
       val k = fine.count()
       val (_, cp, fp) = PipelineQueries.ladderParamsFor(k)
-      Seq(
-        "flat" -> (() => PipelineQueries.cellAssignments(e, fine, 3)),
-        "hier" -> (() => PipelineQueries.hierarchicalCellAssignments(e, fine, 2, 3)),
-        s"trained-cp$cp-fp$fp" ->
-          (() => PipelineQueries.trainedCellAssignmentsDerived(e, fine))
-      ).foreach { case (label, mk) =>
-        val t0 = System.nanoTime()
-        val cand = candPairs(mk()).cache()
-        val n = cand.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        val missed = exact.except(cand).count()
-        println(f"[scale] assign $dir $label candidates=$n%8d " +
-          f"missed=$missed%3d / $nExact $t%6.2f s")
-        cand.unpersist()
-      }
-      exact.unpersist(); fine.unpersist(); e.unpersist()
+      val t0 = System.nanoTime()
+      val cand = candPairs(PipelineQueries.trainedCellAssignmentsDerived(e, fine)).cache()
+      val n = cand.count()
+      val t = (System.nanoTime() - t0) / 1e9
+      val missed = exact.except(cand).count()
+      println(f"[scale] assign $dir trained-cp$cp-fp$fp candidates=$n%8d " +
+        f"missed=$missed%3d / $nExact $t%6.2f s")
+      cand.unpersist(); exact.unpersist(); fine.unpersist(); e.unpersist()
     }
     if (!auditOnly) {
-      println(s"\n== flat vs hierarchical assignment (candidate stage only) ==")
+      println(s"\n== trained two-level assignment (candidate stage only) ==")
       assignSec(baseDir)
       assignSec(outDir)
-
-      println(s"\n== q51 shape: fixed k=16 vs the in-query derived k ==")
-      val nBase = PipelineQueries.embWithDups(spark, baseDir).count()
-      val nOut = PipelineQueries.embWithDups(spark, outDir).count()
-      println(s"[scale] derived k: base=${PipelineQueries.ivfSeedIdsFor(nBase).size} " +
-        s"scaled=${PipelineQueries.ivfSeedIdsFor(nOut).size}")
-      celledDedupSec(baseDir, 16)
-      celledDedupSec(outDir, 16)
-      celledDedupSec(outDir, 16 * embFactor)
     }
     spark.stop()
   }
