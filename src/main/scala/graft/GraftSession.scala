@@ -30,11 +30,12 @@ import org.apache.spark.sql.SparkSession
   * Every default below applies ONLY when the submitted conf does not
   * already carry the key, so `--master`/`--conf` always win; without
   * spark-submit (sbt runMain) the `local[SPARK_GRAFT_CPUS]` dev defaults
-  * apply unchanged. Local-only knobs (the tmpfs scratch dir, the
-  * shuffle-partitions=cores sizing) are gated on the master actually
-  * being local — a cluster keeps its per-node spill dirs and sets
-  * shuffle partitions explicitly (~2x total cores; AQE coalesces the
-  * excess at runtime).
+  * apply unchanged. Local-only knobs (the shuffle-partitions=cores
+  * sizing, the disabled UI) are gated on the master actually being local
+  * — a cluster sets shuffle partitions explicitly (~2x total cores; AQE
+  * coalesces the excess at runtime). Scratch is Spark's own default on
+  * any deployment (`SPARK_LOCAL_DIRS`, else `spark.local.dir`, else
+  * java.io.tmpdir): shuffle and checkpoint blocks go to disk, not RAM.
   */
 object GraftSession {
 
@@ -62,13 +63,7 @@ object GraftSession {
       ) ++
         (if (localMaster) Seq(
           "spark.sql.shuffle.partitions" -> cpus,
-          "spark.ui.enabled" -> "false",
-          // tmpfs scratch shields the shared-disk local box from write
-          // stalls (observed 10-60 s swings on identical plans); a
-          // cluster keeps its per-node SSD spill dirs.
-          "spark.local.dir" ->
-            (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-             else System.getProperty("java.io.tmpdir"))
+          "spark.ui.enabled" -> "false"
         ) else Nil) ++ extra
     var b = SparkSession.builder().appName(appName)
     if (localMaster) b = b.master(s"local[$cpus]")

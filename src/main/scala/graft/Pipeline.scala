@@ -22,10 +22,6 @@ import org.apache.spark.sql.functions.col
   * identical only within one session: across JVMs the parquet footer's
   * per-column-chunk encoding lists can list the same encodings in a
   * different order, so compare artifacts by rows, not by file hash.
-  *
-  * On a cluster the same runner writes multi-file tables (drop the
-  * coalesce(1) via PipelineRunner.singleFile=false) — the skip logic
-  * reads only the `_SUCCESS` markers, not file counts.
   */
 object Pipeline {
 
@@ -96,11 +92,10 @@ object Pipeline {
         // iterations" line a production model report carries): one row
         // per training session, from the tolerance-stopping trainer.
         "em_report" -> ((s: SparkSession, d: String) => {
-          import graft.queries.LinkageQueries
-          val (_, reports) = graft.linkage.LinkageCascade.emTrainMMultiWithReport(
-            LinkageQueries.census(s, d), LinkageQueries.input(s, d),
-            LinkageQueries.emPasses, cfg,
-            iterations = 25, tol = graft.linkage.LinkageCascade.DefaultEmTol)
+          import graft.linkage.LinkageCascade
+          val (_, reports) = LinkageCascade.emTrain(
+            graft.queries.LinkageQueries.emHistograms(s, d), cfg,
+            iterations = 25, tol = LinkageCascade.DefaultEmTol)
           s.createDataFrame(reports.map(r => (r.blockKeys.mkString("+"),
               r.iterations, r.converged,
               BigDecimal(r.maxDelta).setScale(9, BigDecimal.RoundingMode.HALF_UP)
@@ -123,12 +118,14 @@ object Pipeline {
         "accuracy_definitions" -> q("q120_accuracy_definitions")))
   }
 
-  case class StageResult(stage: String, tables: Seq[String], skipped: Boolean,
-      sec: Double)
+  /** One stage's outcome: each table with the seconds it took to build
+    * and write (0 when the stage was skipped), and the stage's seconds.
+    */
+  case class StageResult(stage: String, tables: Seq[(String, Double)],
+      skipped: Boolean, sec: Double)
 
   /** Run (or resume) the pipeline; returns per-stage results. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      singleFile: Boolean = true,
       cfg: graft.linkage.LinkageConfig = graft.queries.LinkageQueries.config)
       : Seq[StageResult] =
     stagesFor(cfg).map { case (stage, tables) =>
@@ -136,17 +133,20 @@ object Pipeline {
       val complete = tables.forall { case (t, _) =>
         new java.io.File(s"$outDir/$stage/$t/_SUCCESS").isFile
       }
-      if (!complete) tables.foreach { case (t, fn) =>
-        val df = fn(spark, sfDir)
-        // Deterministic artifact: one file, rows in full column order —
-        // row-identical across runs on the same input, byte-identical
-        // within one session (the spec pins this); see the object doc.
-        val out = if (singleFile) df.coalesce(1) else df
-        out.sortWithinPartitions(df.columns.map(col): _*)
-          .write.mode("overwrite").parquet(s"$outDir/$stage/$t")
+      val timed = tables.map { case (t, fn) =>
+        if (complete) t -> 0.0
+        else {
+          val t1 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          // Deterministic artifact: one file, rows in full column order —
+          // row-identical across runs on the same input, byte-identical
+          // within one session (the spec pins this); see the object doc.
+          df.coalesce(1).sortWithinPartitions(df.columns.map(col): _*)
+            .write.mode("overwrite").parquet(s"$outDir/$stage/$t")
+          t -> (System.nanoTime() - t1) / 1e9
+        }
       }
-      StageResult(stage, tables.map(_._1), skipped = complete,
-        (System.nanoTime() - t0) / 1e9)
+      StageResult(stage, timed, skipped = complete, (System.nanoTime() - t0) / 1e9)
     }
 
   /** `runMain graft.Pipeline <sfDir> <outDir> [config.yaml]` — the
@@ -154,8 +154,10 @@ object Pipeline {
     * ([[graft.sources.ConfigFile]]): its linkage section (pass list,
     * lambda, threshold) drives the pass-keyed stage artifacts; omitted,
     * the hard-wired defaults apply (and `config/defaults.yaml` parses to
-    * exactly those, spec-pinned). After the stage lines it prints one line
-    * per registered [[Memo]]: its builds, hits and own build seconds.
+    * exactly those, spec-pinned). Each written stage's line is followed by
+    * one line per table with its seconds (the memo builds it triggers
+    * included); after the stages it prints one line per registered
+    * [[Memo]]: its builds, hits and own build seconds.
     */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -169,7 +171,10 @@ object Pipeline {
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, cfg = cfg).foreach { r =>
       val verb = if (r.skipped) "skipped (complete)" else f"wrote in ${r.sec}%.1f s"
-      println(s"[pipeline] ${r.stage}: ${r.tables.mkString(", ")} — $verb")
+      println(s"[pipeline] ${r.stage}: ${r.tables.map(_._1).mkString(", ")} — $verb")
+      if (!r.skipped) r.tables.foreach { case (t, sec) =>
+        println(f"[pipeline]   table ${r.stage}/$t: $sec%.2f s")
+      }
     }
     Memo.registered.foreach { m =>
       println(f"[pipeline] memo ${m.name}: builds=${m.builds} hits=${m.hits} " +

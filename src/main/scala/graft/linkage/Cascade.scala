@@ -139,20 +139,26 @@ object LinkageCascade {
       .dropDuplicates(Seq("rec_id"))
   }
 
-  /** One full predict pass: block → score (+ the pass's fixed weight
-    * offset, e.g. hhcompsearch's bayes_factor_cut_columns=1000) →
-    * threshold → resolve.
+  /** One pass's thresholded candidate links: block → score (+ the pass's
+    * fixed weight offset, e.g. hhcompsearch's bayes_factor_cut_columns=
+    * 1000) → threshold, projected to (pik, rec_id, match_weight). No
+    * window, so it also runs over a stream in append mode; resolve per
+    * micro-batch with [[bestLink]].
     */
-  def predict(census: DataFrame, input: DataFrame, pass: BlockingPass, cfg: LinkageConfig): DataFrame = {
+  def scoredLinks(census: DataFrame, input: DataFrame, pass: BlockingPass,
+      cfg: LinkageConfig): DataFrame = {
     val scored = score(pairs(census, input, pass), pass.comparisonsFor(cfg), pass.constGammas)
     val offset =
       if (pass.weightOffset == 0.0) scored
       else scored.withColumn("match_weight", col("match_weight") + lit(pass.weightOffset))
-    bestLink(
-      offset
-        .filter(col("match_weight") >= cfg.thresholdWeight)
-        .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight")))
+    offset
+      .filter(col("match_weight") >= cfg.thresholdWeight)
+      .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight"))
   }
+
+  /** One full predict pass: [[scoredLinks]] resolved by [[bestLink]]. */
+  def predict(census: DataFrame, input: DataFrame, pass: BlockingPass, cfg: LinkageConfig): DataFrame =
+    bestLink(scoredLinks(census, input, pass, cfg))
 
   /** The cascade fold: passes run in order and a record keeps the link of
     * the FIRST pass that links it (each pass skips what earlier passes
@@ -633,15 +639,38 @@ object LinkageCascade {
           sum("n").over(Window.partitionBy("comparison")).cast("double"), 6))
   }
 
-  /** EM for m-probabilities with u and lambda fixed (the reference trains m
-    * via Splink EM on blocked pairs with λ fixed). The comparison-vector
-    * frame is built ONCE and cached; each iteration is a single map-side
-    * aggregate (no extra shuffles), with only per-level scalars collected.
+  /** One EM training session's data: its blocking, the comparisons it
+    * may estimate (those its blocking does not condition on; see
+    * [[emTrain]]) and the [[gammaHistogram]] of its blocked pairs over
+    * exactly those comparisons.
     */
-  def emTrainM(census: DataFrame, input: DataFrame, trainingPass: BlockingPass,
-      cfg: LinkageConfig, iterations: Int = 5,
-      tol: Double = 0.0): Seq[(String, Int, Double)] =
-    emTrainMMulti(census, input, Seq(trainingPass), cfg, iterations, tol)
+  final case class EmHistogram(pass: BlockingPass, comparisons: Seq[Comparison],
+      patterns: Array[(Array[Int], Long)])
+
+  /** Gamma-pattern histogram of a blocked pair frame: one row per distinct
+    * tuple of `comparisons`' gamma columns with its pair count, in one
+    * Spark job (Splink's E-step compression). `frame` is any frame that
+    * carries those gamma columns: a fresh `score(pairs(…))` or a cached
+    * scored frame of the same blocking. The histogram is bounded by the
+    * product of the comparisons' level counts (a few hundred rows whether
+    * the pairs number thousands or trillions), so EM iterates driver-side
+    * over it with no further Spark jobs. Sorted by pattern for a
+    * deterministic summation order (float addition is not associative;
+    * the groups' arrival order is run-dependent).
+    */
+  def gammaHistogram(frame: DataFrame, comparisons: Seq[Comparison])
+      : Array[(Array[Int], Long)] = {
+    val nC = comparisons.size
+    frame
+      .groupBy(comparisons.map(c => col(c.gammaName)): _*)
+      .agg(count(lit(1)).as("__n"))
+      .collect()
+      .map { r =>
+        val gs = Array.tabulate(nC)(i => r.get(i).asInstanceOf[Number].intValue)
+        (gs, r.getLong(nC))
+      }
+      .sortBy(_._1.mkString(","))
+  }
 
   /** One training session's stopping report: the blocking keys that name
     * the session, the iterations it actually ran, whether it stopped on
@@ -654,130 +683,60 @@ object LinkageCascade {
   /** Splink's default EM convergence tolerance (`em_convergence`). */
   val DefaultEmTol = 1e-4
 
-  /** EM over several training blockings, one session per blocking (the
-    * reference trains two Splink EM sessions: first_name_15+zipcode and
-    * geokey, 03_link_datasets.ipynb cells 67/70). A session CANNOT estimate
-    * m for the comparisons its blocking rule conditions on — the blocked
-    * population is degenerate in them (a geokey block is dominated by
-    * same-household non-matches whose geokey agrees exactly, so including
-    * the geokey comparison makes EM latch onto "same household" as the
-    * match class). Each training pass declares those via
-    * `excludeComparisons`; per-comparison estimates are averaged across the
-    * sessions that produced them (Splink's combine step).
+  /** EM for m-probabilities with u and λ fixed (the reference trains m via
+    * Splink EM on blocked pairs with λ fixed), one session per training
+    * histogram (the reference trains two Splink EM sessions:
+    * first_name_15+zipcode and geokey, 03_link_datasets.ipynb cells
+    * 67/70). A session CANNOT estimate m for the comparisons its blocking
+    * rule conditions on — the blocked population is degenerate in them (a
+    * geokey block is dominated by same-household non-matches whose geokey
+    * agrees exactly, so including the geokey comparison makes EM latch
+    * onto "same household" as the match class); a histogram carries only
+    * the comparisons its pass does not exclude. Per-comparison estimates
+    * are averaged across the sessions that produced them (Splink's
+    * combine step). Returns the estimates in `cfg.comparisons` level order
+    * and each session's stopping report — the Splink-style "EM converged
+    * in N iterations" accounting (tol = 0 runs exactly `iterations` and
+    * reports converged = false).
     */
-  def emTrainMMulti(census: DataFrame, input: DataFrame, trainingPasses: Seq[BlockingPass],
-      cfg: LinkageConfig, iterations: Int = 5, tol: Double = 0.0,
-      cvProvider: BlockingPass => Option[DataFrame] = _ => None): Seq[(String, Int, Double)] =
-    emTrainMMultiWithReport(census, input, trainingPasses, cfg, iterations, tol,
-      cvProvider)._1
-
-  /** [[emTrainMMulti]] plus the per-session stopping reports — the
-    * Splink-style "EM converged in N iterations" accounting a production
-    * trainer surfaces (tol = 0 reports converged = false and iterations
-    * = the fixed cap for every session).
-    */
-  def emTrainMMultiWithReport(census: DataFrame, input: DataFrame,
-      trainingPasses: Seq[BlockingPass], cfg: LinkageConfig,
-      iterations: Int = 5, tol: Double = 0.0,
-      cvProvider: BlockingPass => Option[DataFrame] = _ => None)
-      : (Seq[(String, Int, Double)], Seq[EmSessionReport]) = {
-    // Sessions are independent (each owns its blocking, cached gamma frame
-    // and iteration loop), so they submit their Spark jobs CONCURRENTLY —
-    // wall-clock is the slowest session, not the sum. Results stay
-    // deterministic: Par.all returns results in pass order and each
-    // session's math is self-contained.
-    val sessions: Seq[(Set[String], Map[(String, Int), Double], EmSessionReport)] =
-      Par.all(input.sparkSession, "em_sessions", trainingPasses.map { p =>
-        p.name -> { () =>
-          val cmps = p.comparisonsFor(cfg)
-          val (m, its, conv, delta) =
-            emSession(census, input, p, cmps, cfg, iterations, cvProvider(p), tol)
-          (cmps.map(_.name).toSet, m, EmSessionReport(p.keys, its, conv, delta))
-        }
-      })
+  def emTrain(hists: Seq[EmHistogram], cfg: LinkageConfig, iterations: Int = 5,
+      tol: Double = 0.0): (Seq[(String, Int, Double)], Seq[EmSessionReport]) = {
+    val sessions = hists.map(h => (h, emSession(h, cfg, iterations, tol)))
     val ests = cfg.comparisons.flatMap { c =>
-      val ms = sessions.collect { case (names, m, _) if names.contains(c.name) => m }
+      val ms = sessions.collect {
+        case (h, (m, _)) if h.comparisons.exists(_.name == c.name) => m
+      }
       require(ms.nonEmpty, s"no training session estimates comparison '${c.name}'")
       c.params.map { case (g, _, _) =>
         (c.name, g, ms.map(_((c.name, g))).sum / ms.size)
       }
     }
-    (ests, sessions.map(_._3))
+    (ests, sessions.map(_._2._2))
   }
 
-  /** One session's estimates alone (only the comparisons the session's
-    * blocking allows it to train) — the single-session view of
-    * [[emTrainMMulti]], for callers that verify or inspect a session
-    * rather than combine all of them. With `iterations = 1` this is the
-    * closed-form single E+M step the q101 oracle reproduces in SQL.
+  /** One EM session over its histogram: m for the session's comparisons,
+    * keyed (comparison, gamma), and its stopping report. With
+    * `iterations = 1` this is the closed-form single E+M step the q101
+    * oracle reproduces in SQL. tol = 0 runs the fixed iteration count;
+    * tol > 0 is Splink's convergence stop — the session ends after the
+    * first iteration whose max |Δm| over every (comparison, level) falls
+    * below it.
     */
-  def emTrainSession(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      cfg: LinkageConfig, iterations: Int = 5,
-      cvOpt: Option[DataFrame] = None, tol: Double = 0.0): Seq[(String, Int, Double)] = {
-    val cmps = pass.comparisonsFor(cfg)
-    val (m, _, _, _) = emSession(census, input, pass, cmps, cfg, iterations, cvOpt, tol)
-    cmps.flatMap(c => c.params.map { case (g, _, _) => (c.name, g, m((c.name, g))) })
-  }
-
-  /** One EM session. The comparison-vector frame is collapsed to a gamma-
-    * PATTERN histogram (one row per distinct gamma tuple with its pair
-    * count) in a single Spark job — Splink's E-step compression. The
-    * histogram is bounded by the product of the comparisons' level counts
-    * (a few hundred rows whether the blocked pairs number thousands or
-    * trillions), so the EM iterations run driver-side over it with no
-    * further Spark jobs (previously: one full aggregate pass per
-    * iteration).
-    *
-    * `cvOpt` supplies an already-materialized frame carrying (at least)
-    * this session's gamma columns for the SAME blocking — a caller that
-    * has the blocked+scored frame cached (e.g. for prediction) hands it
-    * over and the session skips the join and every gamma evaluation.
-    */
-  private def emSession(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      comparisons: Seq[Comparison], cfg: LinkageConfig,
-      iterations: Int, cvOpt: Option[DataFrame] = None,
-      tol: Double = 0.0): (Map[(String, Int), Double], Int, Boolean, Double) = {
-    val hist = gammaHistogram(census, input, pass, comparisons, cvOpt)
-    var m = emInit(comparisons)
+  def emSession(hist: EmHistogram, cfg: LinkageConfig, iterations: Int,
+      tol: Double = 0.0): (Map[(String, Int), Double], EmSessionReport) = {
+    var m = emInit(hist.comparisons)
     var it = 0
     var converged = false
     var lastDelta = Double.NaN
-    // tol = 0 runs the fixed iteration count (bit-identical to the
-    // pre-tolerance loop); tol > 0 is Splink's convergence stop — the
-    // session ends after the first iteration whose max |Δm| over every
-    // (comparison, level) falls below it, and reports how many it ran.
     while (it < iterations && !converged) {
-      val next = emStep(hist, comparisons, m, cfg.lambda)
+      val next = emStep(hist.patterns, hist.comparisons, m, cfg.lambda)
       lastDelta = m.keysIterator
         .foldLeft(0.0)((acc, k) => math.max(acc, math.abs(next(k) - m(k))))
       m = next
       it += 1
       if (tol > 0.0 && lastDelta < tol) converged = true
     }
-    (m, it, converged, lastDelta)
-  }
-
-  /** Gamma-pattern histogram of one session's blocked pairs (the E-step
-    * compression; see [[emSession]]), sorted for a deterministic summation
-    * order (float addition is not associative; the histogram's arrival
-    * order is run-dependent).
-    */
-  private def gammaHistogram(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      comparisons: Seq[Comparison], cvOpt: Option[DataFrame]): Array[(Array[Int], Long)] = {
-    val src = cvOpt.getOrElse(
-      comparisons.foldLeft(pairs(census, input, pass)) { (df, c) =>
-        df.withColumn(c.gammaName, FellegiSunter.gammaCol(c))
-      })
-    val nC = comparisons.size
-    src
-      .groupBy(comparisons.map(c => col(c.gammaName)): _*)
-      .agg(count(lit(1)).as("__n"))
-      .collect()
-      .map { r =>
-        val gs = Array.tabulate(nC)(i => r.get(i).asInstanceOf[Number].intValue)
-        (gs, r.getLong(nC))
-      }
-      .sortBy(_._1.mkString(","))
+    (m, EmSessionReport(hist.pass.keys, it, converged, lastDelta))
   }
 
   /** Splink-style init: strongest level 0.8, rest of the mass uniform. */
@@ -852,32 +811,24 @@ object LinkageCascade {
     * engine-reproducible: every iteration starts from bit-identical inputs
     * in Spark and the unrolled DuckDB oracle, so cross-engine ulp noise
     * cannot compound across iterations. The production estimator
-    * ([[emTrainM]]) stays unquantized; at 6 dp the trajectories agree to
+    * ([[emTrain]]) stays unquantized; at 6 dp the trajectories agree to
     * the displayed precision. Iteration 0 is the documented init.
+    *
+    * Each row carries a CONVERGED flag: true from the first iteration
+    * whose max |Δm| against the previous iteration falls below
+    * [[DefaultEmTol]] (Splink's convergence rule, evaluated on the
+    * quantized trajectory). The deltas subtract as EXACT DECIMALS — the
+    * quantized m's are 6-dp grid points, so a double subtraction's ulp
+    * error could split the `< tol` comparison between engines right at the
+    * grid boundary; BigDecimal here and DECIMAL(18,6) in the oracle make
+    * the flag bit-reproducible. Iteration 0 (the init) is never converged.
+    * The flag REPORTS — it does not stop the loop, so the trajectory stays
+    * fixed-depth and the unrolled oracle stays hash-exact at any tolerance
+    * outcome.
     */
-  def emHistory(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      cfg: LinkageConfig, iterations: Int = 3,
-      cvOpt: Option[DataFrame] = None): Seq[(Int, String, Int, Double)] =
-    emHistoryConverged(census, input, pass, cfg, iterations, cvOpt)
-      .map { case (it, c, g, m, _) => (it, c, g, m) }
-
-  /** [[emHistory]] with a per-iteration CONVERGED flag: true from the
-    * first iteration whose max |Δm| against the previous iteration falls
-    * below [[DefaultEmTol]] (Splink's convergence rule, evaluated on the
-    * 6-dp-quantized trajectory). The deltas subtract as EXACT DECIMALS —
-    * the quantized m's are 6-dp grid points, so a double subtraction's
-    * ulp error could split the `< tol` comparison between engines right
-    * at the grid boundary; BigDecimal here and DECIMAL(18,6) in the
-    * oracle make the flag bit-reproducible. Iteration 0 (the init) is
-    * never converged. The flag REPORTS — it does not stop the loop, so
-    * the trajectory stays fixed-depth and the unrolled oracle stays
-    * hash-exact at any tolerance outcome.
-    */
-  def emHistoryConverged(census: DataFrame, input: DataFrame, pass: BlockingPass,
-      cfg: LinkageConfig, iterations: Int = 3,
-      cvOpt: Option[DataFrame] = None): Seq[(Int, String, Int, Double, Boolean)] = {
-    val comparisons = pass.comparisonsFor(cfg)
-    val hist = gammaHistogram(census, input, pass, comparisons, cvOpt)
+  def emHistory(hist: EmHistogram, cfg: LinkageConfig, iterations: Int)
+      : Seq[(Int, String, Int, Double, Boolean)] = {
+    val comparisons = hist.comparisons
     def q6(x: Double): BigDecimal =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
     def rows(it: Int, m: Map[(String, Int), BigDecimal], conv: Boolean)
@@ -890,7 +841,7 @@ object LinkageCascade {
     val out = Seq.newBuilder[(Int, String, Int, Double, Boolean)]
     out ++= rows(0, m, conv = false)
     for (it <- 1 to iterations) {
-      val next = emStep(hist, comparisons, m.map { case (k, v) => k -> v.toDouble },
+      val next = emStep(hist.patterns, comparisons, m.map { case (k, v) => k -> v.toDouble },
         cfg.lambda).map { case (k, v) => k -> q6(v) }
       val delta = m.keysIterator
         .foldLeft(BigDecimal(0))((acc, k) => acc.max((next(k) - m(k)).abs))

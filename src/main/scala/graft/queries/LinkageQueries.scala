@@ -227,7 +227,7 @@ object LinkageQueries {
   /** Block-key column → the comparison it conditions. An EM training
     * session must not estimate m for a comparison its blocking keys pin:
     * the blocked population is degenerate in it (see the degenerate-mode
-    * doc on [[LinkageCascade.emTrainMMulti]] — a zip3/geokey block is
+    * doc on [[LinkageCascade.emTrain]] — a zip3/geokey block is
     * dominated by same-area/same-household pairs, so the geokey comparison
     * makes EM latch onto "same household" as the match class; a dob_year
     * key makes every pair agree exactly on byear). Mirrors Splink's
@@ -1075,7 +1075,7 @@ object LinkageQueries {
     * renders from the SAME config the driver-side loop reads, and the
     * arithmetic mirrors its evaluation order (factor products left-to-
     * right in comparison order), so the SQL can't drift from
-    * [[LinkageCascade.emTrainSession]].
+    * [[LinkageCascade.emSession]].
     */
   private def emStepSql: String = {
     val sess = emPasses.head
@@ -1138,7 +1138,7 @@ object LinkageQueries {
     // Converged flag per iteration: max |Δm| vs the previous stage as an
     // EXACT DECIMAL compare (the 6-dp m's are grid points; a double
     // subtraction's ulp could split `< tol` at the boundary) — mirrors
-    // emHistoryConverged's BigDecimal rule. Iteration 0 is never converged.
+    // emHistory's BigDecimal rule. Iteration 0 is never converged.
     def convSql(it: Int): String =
       if (it == 0) "FALSE AS converged"
       else
@@ -1562,6 +1562,31 @@ object LinkageQueries {
       .cache()
   }
 
+  /** The EM training data: each [[emPasses]] session's gamma-pattern
+    * histogram ([[LinkageCascade.gammaHistogram]]), built once per
+    * (session, dir) with the sessions' jobs running concurrently; q31,
+    * q101, q105, q107 and the pipeline's em_report iterate driver-side
+    * over it. A session that blocks like [[blockPass]] groups the cached
+    * [[scoredBlock]] (its gammas are a superset of the session's
+    * comparisons); any other session joins and scores its own pairs.
+    */
+  private[graft] val emHistograms =
+    Memo[Seq[LinkageCascade.EmHistogram]]("em_histograms", _ => Nil) { (s, d) =>
+      val (c, i) = (census(s, d), input(s, d))
+      val sessions = emPasses.map { p =>
+        val cmps = p.comparisonsFor(config)
+        val gammas =
+          if (p.keys == blockPass.keys && p.rightRemap.isEmpty && p.cuts.isEmpty)
+            scoredBlock(s, d)
+          else LinkageCascade.score(LinkageCascade.pairs(c, i, p), cmps)
+        (p, cmps, gammas)
+      }
+      Par.all(s, "em_sessions", sessions.map { case (p, cmps, gammas) =>
+        p.name -> (() =>
+          LinkageCascade.EmHistogram(p, cmps, LinkageCascade.gammaHistogram(gammas, cmps)))
+      })
+    }
+
   // q78 and q108 both price every pass's blocks; the 13-row summary is
   // memoized like the other shared frames (cache holds the materialized
   // rows, not a plan — blockCostSummaryAll's two explode-aggregates are
@@ -1749,16 +1774,7 @@ object LinkageQueries {
       "q31_em_training",
       (s, d) => {
         reg(s)
-        // The zip3 session's blocking is the demo blockPass whose scored
-        // frame is already cached — hand it over so the session skips the
-        // join + gamma evaluation (its gammas are a superset of the
-        // session's comparisons).
-        val result = LinkageCascade.emTrainMMulti(
-          census(s, d), input(s, d), emPasses, config,
-          cvProvider = p =>
-            if (p.keys == blockPass.keys && p.rightRemap.isEmpty && p.cuts.isEmpty)
-              Some(scoredBlock(s, d))
-            else None)
+        val (result, _) = LinkageCascade.emTrain(emHistograms(s, d), config)
         s.createDataFrame(result.map { case (c, g, m) => (c, g, BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) })
           .toDF("comparison", "gamma", "m_hat")
       }
@@ -1766,19 +1782,19 @@ object LinkageQueries {
     QueryDef(
       // The EM update rule itself, oracle-checked: ONE E+M step of the
       // em_zip3 session from the documented init (top level 0.8, uniform
-      // lower mass), run through the production emTrainSession path and
+      // lower mass), run through the production emSession path and
       // reproduced closed-form by the generated SQL (emStepSql). q31's
       // full training stays rows-only — it's iterative — but the update
       // it iterates is pinned against DuckDB here.
       "q101_em_step",
       (s, d) => {
         reg(s)
-        val result = LinkageCascade.emTrainSession(
-          census(s, d), input(s, d), emPasses.head, config, iterations = 1,
-          cvOpt = Some(scoredBlock(s, d)))
-        s.createDataFrame(result.map { case (c, g, m) =>
-          (c, g, BigDecimal(m).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }).toDF("comparison", "gamma", "m_step")
+        val hist = emHistograms(s, d).head
+        val (m, _) = LinkageCascade.emSession(hist, config, iterations = 1)
+        s.createDataFrame(hist.comparisons.flatMap(c => c.params.map { case (g, _, _) =>
+          (c.name, g,
+            BigDecimal(m((c.name, g))).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        })).toDF("comparison", "gamma", "m_step")
       },
       Some(emStepSql)
     ),
@@ -1787,17 +1803,15 @@ object LinkageQueries {
       // session's per-iteration m trajectory (iteration 0 = documented
       // init), 6-dp-quantized between iterations so the whole ITERATIVE
       // run is hash-exact against the unrolled DuckDB oracle — see
-      // emHistorySql. Reuses the cached scored block; the per-iteration
+      // emHistorySql. Reads the em_histograms memo; the per-iteration
       // work is driver-side over the O(patterns) histogram.
       "q105_em_history",
       (s, d) => {
         reg(s)
         // The trajectory plus Splink's convergence accounting: converged
         // flips true at the first iteration whose max |Δm| < DefaultEmTol
-        // (exact-decimal compare in both engines — see emHistoryConverged).
-        val hist = LinkageCascade.emHistoryConverged(
-          census(s, d), input(s, d), emPasses.head, config, iterations = 3,
-          cvOpt = Some(scoredBlock(s, d)))
+        // (exact-decimal compare in both engines — see emHistory).
+        val hist = LinkageCascade.emHistory(emHistograms(s, d).head, config, iterations = 3)
         s.createDataFrame(hist).toDF("iter", "comparison", "gamma", "m", "converged")
       },
       Some(emHistorySql(3))
@@ -1854,7 +1868,7 @@ object LinkageQueries {
     QueryDef(
       // Splink's parameter_estimate_comparisons_chart: the m each training
       // session produced for every comparison level, side by side, plus
-      // the combined estimate (the average emTrainMMulti ships) — NULL
+      // the combined estimate (the average emTrain ships) — NULL
       // where a session's blocking forbids it from estimating that
       // comparison (em_zip3 can't train geo; em_name_yob can't train
       // first/byear). Endpoints come from the 6-dp-quantized 3-iteration
@@ -1863,12 +1877,9 @@ object LinkageQueries {
       "q107_param_compare",
       (s, d) => {
         reg(s)
-        def fin(h: Seq[(Int, String, Int, Double)]): Map[(String, Int), Double] =
-          h.filter(_._1 == 3).map { case (_, c, g, m) => (c, g) -> m }.toMap
-        val m1 = fin(LinkageCascade.emHistory(
-          census(s, d), input(s, d), emPasses(0), config, 3, Some(scoredBlock(s, d))))
-        val m2 = fin(LinkageCascade.emHistory(
-          census(s, d), input(s, d), emPasses(1), config, 3, None))
+        val Seq(m1, m2) = emHistograms(s, d).map(h =>
+          LinkageCascade.emHistory(h, config, iterations = 3)
+            .collect { case (3, c, g, m, _) => (c, g) -> m }.toMap)
         val rows = comparisons.flatMap(c => c.params.map { case (g, _, _) =>
           val a = m1.get((c.name, g))
           val b = m2.get((c.name, g))

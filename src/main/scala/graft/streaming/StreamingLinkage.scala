@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * stream, scored against a static census reference — the production
   * deployment shape of the flagship cascade (the reference links fixed
   * files; an engine fed by a live intake queue links the same model
-  * per-arrival). Reuses the batch blocking/scoring machinery verbatim:
-  * the Column trees are identical, so streaming and batch scores cannot
-  * drift (StreamingSpec asserts equality against the batch predict pass).
+  * per-arrival). A stream of (derived) input records is scored by
+  * [[LinkageCascade.scoredLinks]], the same function the batch predict
+  * pass resolves, so streaming and batch scores cannot drift
+  * (StreamingSpec asserts equality against the batch predict pass).
   *
   * Scale shape: each micro-batch plans the same single equi-join on the
   * pass's block keys that the batch pass plans; the arriving batch is
@@ -28,25 +29,6 @@ object StreamingLinkage {
     */
   def reconstitute(arrivals: DataFrame, inputStatic: DataFrame): DataFrame =
     arrivals.join(inputStatic, Seq("rec_id"))
-
-  /** One blocked predict pass over a stream of (derived) input records:
-    * block → score → offset → threshold, in append mode. Best-link
-    * resolution is NOT applied here — window aggregation over an unbounded
-    * stream is unsupported and semantically unbounded; resolve per
-    * micro-batch with [[resolveBatch]] (foreachBatch) or downstream.
-    */
-  def scoredLinks(census: DataFrame, inputStream: DataFrame, pass: BlockingPass,
-      cfg: LinkageConfig): DataFrame = {
-    val scored = LinkageCascade.score(
-      LinkageCascade.pairs(census, inputStream, pass),
-      pass.comparisonsFor(cfg), pass.constGammas)
-    val offset =
-      if (pass.weightOffset == 0.0) scored
-      else scored.withColumn("match_weight", col("match_weight") + lit(pass.weightOffset))
-    offset
-      .filter(col("match_weight") >= cfg.thresholdWeight)
-      .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight"))
-  }
 
   /** Per-micro-batch best-link resolution for a foreachBatch sink: each
     * record arrives on exactly one micro-batch, so resolving within the

@@ -93,8 +93,11 @@ class EdgeSpec extends SparkTestBase {
     GraftFunctions.register(spark)
     // A block key pair that can never agree: census zip3 vs a sentinel.
     val nowhere = input.withColumn("zip3", lit("###"))
-    val est = LinkageCascade.emTrainM(census, nowhere,
-      BlockingPass("void", Seq("zip3")), cfg, iterations = 3)
+    val void = BlockingPass("void", Seq("zip3"))
+    val hist = LinkageCascade.EmHistogram(void, cfg.comparisons, LinkageCascade.gammaHistogram(
+      LinkageCascade.score(LinkageCascade.pairs(census, nowhere, void), cfg), cfg.comparisons))
+    assert(hist.patterns.isEmpty)
+    val (est, _) = LinkageCascade.emTrain(Seq(hist), cfg, iterations = 3)
     assert(est.nonEmpty)
     est.foreach { case (name, g, m) =>
       assert(!m.isNaN && m >= 0.0 && m <= 1.0, s"($name, $g) m=$m out of range")

@@ -12,6 +12,14 @@ class LinkageSpec extends SparkTestBase {
   private def input = LinkageQueries.input(spark, sfDir)
   private val cfg = LinkageQueries.config
 
+  /** A training session's histogram over a fresh blocked join. */
+  private def freshHistogram(c: DataFrame, i: DataFrame, p: BlockingPass,
+      conf: LinkageConfig): LinkageCascade.EmHistogram = {
+    val cmps = p.comparisonsFor(conf)
+    LinkageCascade.EmHistogram(p, cmps, LinkageCascade.gammaHistogram(
+      LinkageCascade.score(LinkageCascade.pairs(c, i, p), cmps), cmps))
+  }
+
   test("all linkage queries run and return rows at sf0.001") {
     LinkageQueries.defs.foreach { d =>
       GraftFunctions.register(spark)
@@ -100,9 +108,10 @@ class LinkageSpec extends SparkTestBase {
     GraftFunctions.register(spark)
     // Train the NON-DEGENERATE sessions q31 uses: each pass excludes the
     // comparisons its blocking conditions on (em_zip3 excludes geo;
-    // em_name_yob excludes first/byear) — see Cascade.emTrainMMulti's
+    // em_name_yob excludes first/byear) — see Cascade.emTrain's
     // degenerate-mode doc.
-    val m = LinkageCascade.emTrainMMulti(census, input, LinkageQueries.emPasses, cfg, iterations = 3)
+    val (m, _) = LinkageCascade.emTrain(
+      LinkageQueries.emPasses.map(freshHistogram(census, input, _, cfg)), cfg, iterations = 3)
     val byComp = m.groupBy(_._1)
     byComp.foreach { case (name, rows) =>
       val total = rows.map(_._3).sum
@@ -161,9 +170,10 @@ class LinkageSpec extends SparkTestBase {
       val pass = BlockingPass("blk", Seq("blk"))
       val cfg2 = LinkageConfig(cmps, lambda = 1.0 / b, thresholdWeight = 0.0,
         passes = Seq(pass))
-      val m = LinkageCascade.emTrainSession(census2, input2, pass, cfg2, iterations = 10)
+      val (m, _) = LinkageCascade.emSession(
+        freshHistogram(census2, input2, pass, cfg2), cfg2, iterations = 10)
       plantedRates.zipWithIndex.foreach { case ((nm, nominal), i) =>
-        val mExact = m.find(t => t._1 == nm && t._2 == 1).get._3
+        val mExact = m((nm, 1))
         val realized = empirical.getLong(i).toDouble / n
         assert(math.abs(mExact - realized) < 0.05,
           f"seed=$seed B=$b $nm: m̂=$mExact%.4f realized=$realized%.4f nominal=$nominal")
@@ -190,8 +200,8 @@ class LinkageSpec extends SparkTestBase {
     val cfg2 = LinkageConfig(cmps, lambda = 1.0 / b, thresholdWeight = 0.0,
       passes = Seq(pass))
     val cap = 50
-    val (est, reports) = LinkageCascade.emTrainMMultiWithReport(
-      census2, input2, Seq(pass), cfg2, iterations = cap,
+    val hists = Seq(freshHistogram(census2, input2, pass, cfg2))
+    val (est, reports) = LinkageCascade.emTrain(hists, cfg2, iterations = cap,
       tol = LinkageCascade.DefaultEmTol)
     val r = reports.head
     assert(r.converged, s"did not converge within $cap iterations: $r")
@@ -200,19 +210,42 @@ class LinkageSpec extends SparkTestBase {
     assert(r.blockKeys == Seq("blk"))
     // tol = 0 must reproduce the pre-tolerance fixed-iteration math
     // exactly (the q31 production path stays hash-identical).
-    val fixedA = LinkageCascade.emTrainMMulti(
-      census2, input2, Seq(pass), cfg2, iterations = 5)
-    val fixedB = LinkageCascade.emTrainMMulti(
-      census2, input2, Seq(pass), cfg2, iterations = 5, tol = 0.0)
+    val fixedA = LinkageCascade.emTrain(hists, cfg2, iterations = 5)
+    val fixedB = LinkageCascade.emTrain(hists, cfg2, iterations = 5, tol = 0.0)
     assert(fixedA == fixedB)
     // The converged estimates agree with the run-to-cap estimates to the
     // tolerance scale — stopping early changed cost, not the answer.
-    val capped = LinkageCascade.emTrainMMulti(
-      census2, input2, Seq(pass), cfg2, iterations = cap)
+    val (capped, _) = LinkageCascade.emTrain(hists, cfg2, iterations = cap)
     est.zip(capped).foreach { case ((c1, g1, m1), (c2, g2, m2)) =>
       assert(c1 == c2 && g1 == g2 && math.abs(m1 - m2) < 0.01,
         s"$c1 gamma=$g1: converged $m1 vs capped $m2")
     }
+  }
+
+  test("EM histograms: one memo build equals fresh joins and feeds every EM consumer") {
+    GraftFunctions.register(spark)
+    def rows(h: LinkageCascade.EmHistogram): Seq[(Seq[Int], Long)] =
+      h.patterns.map { case (g, n) => (g.toSeq, n) }.toSeq
+    val memo = LinkageQueries.emHistograms(spark, sfDir)
+    val fresh = LinkageQueries.emPasses.map(freshHistogram(census, input, _, cfg))
+    assert(memo.map(_.pass) == LinkageQueries.emPasses)
+    memo.zip(fresh).foreach { case (m, f) =>
+      assert(m.comparisons == f.comparisons, m.pass.name)
+      assert(rows(m).nonEmpty, s"${m.pass.name}: empty training histogram")
+      assert(rows(m) == rows(f), s"${m.pass.name}: memo histogram differs from a fresh join")
+    }
+    // em_report, q31, q101, q105 and q107 read the memo: no rebuild.
+    val builds = LinkageQueries.emHistograms.builds
+    val report = Pipeline.stages.flatMap(_._2).toMap.apply("em_report")(spark, sfDir)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getDouble(3)))
+      .toSeq
+    val (_, expected) = LinkageCascade.emTrain(fresh, cfg, iterations = 25,
+      tol = LinkageCascade.DefaultEmTol)
+    assert(report == expected.map(r => (r.blockKeys.mkString("+"), r.iterations,
+      r.converged, BigDecimal(r.maxDelta).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+    Seq("q31_em_training", "q101_em_step", "q105_em_history", "q107_param_compare")
+      .foreach(q => assert(SparkEntry.queries(q)(spark, sfDir).count() > 0, q))
+    assert(LinkageQueries.emHistograms.builds == builds)
   }
 
   test("bestLink keeps same-pik ties and drops only multi-pik ties") {

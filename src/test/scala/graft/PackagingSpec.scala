@@ -21,7 +21,8 @@ class PackagingSpec extends AnyFunSuite {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     assert(opts("spark.sql.adaptive.enabled") === "true")
     assert(opts("spark.sql.legacy.parquet.nanosAsLong") === "true")
-    assert(opts.contains("spark.local.dir"))
+    // Scratch is Spark's own default (disk), never a RAM-backed tmpfs.
+    assert(!opts.contains("spark.local.dir"))
   }
 
   test("session builder: a submitted master suppresses local-only knobs") {
@@ -29,8 +30,8 @@ class PackagingSpec extends AnyFunSuite {
       .set("spark.master", "spark://example.invalid:7077")
     val opts = confOf(GraftSession.builderWith(submitted, "t"))
     // The builder must not override the submitted master, must not size
-    // shuffle partitions to the LOCAL core count, and must not point a
-    // cluster's spill dirs at this box's tmpfs.
+    // shuffle partitions to the LOCAL core count, and must not set the
+    // cluster's spill dirs.
     assert(!opts.contains("spark.master"))
     assert(!opts.contains("spark.sql.shuffle.partitions"))
     assert(!opts.contains("spark.local.dir"))

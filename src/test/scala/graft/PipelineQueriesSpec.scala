@@ -247,7 +247,7 @@ class PipelineQueriesSpec extends SparkTestBase {
     sig.unpersist()
   }
 
-  test("bpe training releases superseded checkpoints: <= 2 live, none after") {
+  test("bpe training reaches 256 merges and leaks no persisted RDD") {
     import graft.operators.Bpe
     // Synthetic wide-vocabulary corpus (3000 distinct ~8-char words): the
     // sf0.001 documents exhaust their pair space at 89 merges, too

@@ -239,7 +239,7 @@ class StreamingSpec extends SparkTestBase {
     // reconstituted from the static preprocessed snapshot, then scored.
     val stream = MemoryStream[Long]
     val arrivals = stream.toDF().withColumnRenamed("value", "rec_id")
-    val scored = StreamingLinkage.scoredLinks(census,
+    val scored = LinkageCascade.scoredLinks(census,
       StreamingLinkage.reconstitute(arrivals, input), pass, cfg)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
