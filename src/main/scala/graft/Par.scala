@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, Future, TimeUnit}
+import java.util.concurrent.{CancellationException, ExecutionException, ExecutorCompletionService, Executors, Future, Phaser, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration._
@@ -25,6 +25,12 @@ import org.apache.spark.sql.SparkSession
   *    or at the timeout, each unfinished task's jobs are cancelled by its
   *    tag and its thread is interrupted; then one exception names every
   *    failed, timed-out and cancelled task.
+  *  - Quiet after a failure. A cancelled task can still be submitting jobs
+  *    (one that waited on a memo another task was building rebuilds it,
+  *    say), so before throwing the call re-cancels the unfinished tasks'
+  *    tags until their bodies have exited, within [[Timeout]]. A caller
+  *    that retries the same work (a pipeline re-run into the same
+  *    directory) never races the failed call's tasks.
   */
 object Par {
 
@@ -61,9 +67,14 @@ object Par {
     val session = SparkSession.getActiveSession
     val call = s"graft-par:$site#${callIds.incrementAndGet()}"
     val done = new ExecutorCompletionService[T](pool)
+    // Parties: this call and every task body running now. It terminates
+    // once the call has failed and the last body has exited; a body that
+    // starts after that does not run.
+    val running = new Phaser(1)
     val submitted: Seq[(String, String, Future[T])] = tasks.map { case (name, body) =>
       val tag = s"$call:$name"
       (name, tag, done.submit { () =>
+        if (running.register() < 0) throw new CancellationException(s"$call failed")
         props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
         sc.addJobTags(tags + tag)
         session.foreach(SparkSession.setActiveSession)
@@ -72,6 +83,7 @@ object Par {
           props.foreach { case (k, _) => sc.setLocalProperty(k, null) }
           sc.clearJobTags()
           SparkSession.clearActiveSession()
+          running.arriveAndDeregister()
         }
       })
     }
@@ -95,6 +107,14 @@ object Par {
       open.foreach { case (_, tag, f) =>
         sc.cancelJobsWithTag(tag, s"$call failed")
         f.cancel(true)
+      }
+      if (open.nonEmpty) {
+        val phase = running.arriveAndDeregister()
+        try while (!running.isTerminated && deadline.hasTimeLeft()) {
+          try running.awaitAdvanceInterruptibly(phase, 100, TimeUnit.MILLISECONDS)
+          catch { case _: TimeoutException => }
+          open.foreach { case (_, tag, _) => sc.cancelJobsWithTag(tag, s"$call failed") }
+        } catch { case _: InterruptedException => Thread.currentThread.interrupt() }
       }
     }
     if (failed) {

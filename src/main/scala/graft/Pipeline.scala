@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions.col
   * A stage is COMPLETE when every one of its tables has a parquet
   * `_SUCCESS` marker under `outDir/<stage>/<table>`; complete stages are
   * skipped wholesale (a partially-written stage — crash mid-stage —
-  * re-runs whole, so no table can pair with a stale sibling). Writes are
+  * re-runs whole, so no table can pair with a stale sibling). Unlike the
+  * Snakefile, no stage reads an earlier stage's files (every table is built
+  * from the input through the shared memos), so [[run]] writes the tables
+  * of all incomplete stages as one concurrent DAG, with no barrier between
+  * stages; a stage's reported seconds are its window of that run. Writes are
   * single-file with rows fully sorted, so every run produces the same
   * ROWS in the same order — the property that makes persisted artifacts
   * diffable across runs and the resume semantics trustworthy. Bytes are
@@ -26,7 +30,8 @@ import org.apache.spark.sql.functions.col
 object Pipeline {
 
   /** One stage: name → (table name → frame builder). Stage order is the
-    * reference's notebook order; tables within a stage are independent.
+    * reference's notebook order; no table reads another, within a stage or
+    * across stages.
     */
   def stages: Seq[(String, Seq[(String, (SparkSession, String) => DataFrame)])] =
     stagesFor(graft.queries.LinkageQueries.config)
@@ -49,14 +54,22 @@ object Pipeline {
     // own scoring configuration (q76 — scored flag, blocking-implied
     // constant gammas, weight offset), one artifact per pass. Both
     // inputs are memoized O(model)-sized frames, so the 15 artifacts
-    // cost 15 tiny broadcast joins, not 15 cascade runs.
-    def passReport(passName: String): (SparkSession, String) => DataFrame =
-      (s, d) => q("q75_model_report")(s, d)
-        .join(q("q76_pass_matrix")(s, d)
-          .filter(col("pass") === passName)
+    // cost 15 tiny broadcast joins, not 15 cascade runs. A cascade pass
+    // must search one of the cascade's reference frames: a report for a
+    // pass that names another frame fails its table.
+    def passReport(p: graft.linkage.BlockingPass): (SparkSession, String) => DataFrame =
+      (s, d) => {
+        if (!cfg.hhPasses.contains(p)) {
+          val refs = graft.queries.LinkageQueries.cascadeRefs(s, d)
+          require(refs.contains(p.ref), s"pass ${p.name} searches reference " +
+            s"frame '${p.ref}', not one of ${refs.keys.mkString(", ")}")
+        }
+        q("q75_model_report")(s, d).join(q("q76_pass_matrix")(s, d)
+          .filter(col("pass") === p.name)
           .select(col("pass"), col("ordinal"), col("ref_file"),
             col("block_keys"), col("comparison"), col("scored"),
             col("const_gamma"), col("weight_offset")), Seq("comparison"))
+      }
     val passReports: Seq[(String, (SparkSession, String) => DataFrame)] = {
       val allPasses = cfg.passes ++ cfg.hhPasses
       // The artifact list keys on pass NAME (the q76 `pass` column and
@@ -73,7 +86,7 @@ object Pipeline {
       allPasses.map { p =>
         val refFile =
           if (cfg.hhPasses.contains(p)) "hhcomp" else p.ref
-        s"splink_reports/${refFile}__${p.name}" -> passReport(p.name)
+        s"splink_reports/${refFile}__${p.name}" -> passReport(p)
       }
     }
     Seq(
@@ -118,45 +131,78 @@ object Pipeline {
         "accuracy_definitions" -> q("q120_accuracy_definitions")))
   }
 
-  /** One stage's outcome: each table with the seconds it took to build
-    * and write (0 when the stage was skipped), and the stage's seconds.
+  /** One stage's outcome: each table with the seconds its own build and
+    * write took (0 when the stage was skipped), and `sec`, the stage's
+    * window: from the end of the previous stage's window (the run's start
+    * for the first stage) to when the stage's last table finished, floored
+    * at 0. Tables of different stages run at the same time, so a table's
+    * seconds can start before its stage's window does; the windows
+    * themselves tile the run, and laid back to back from its start they end
+    * where its last table did. So graftbench's `Tracer` (back-to-back
+    * stage spans) and `Harness` (`stage -> sec`) stay correct unchanged.
     */
   case class StageResult(stage: String, tables: Seq[(String, Double)],
       skipped: Boolean, sec: Double)
 
-  /** Run (or resume) the pipeline; returns per-stage results. */
+  /** Run (or resume) the pipeline; returns per-stage results.
+    *
+    * One concurrent DAG: completeness is checked for every stage up front,
+    * then every table of every incomplete stage is written through one
+    * [[Par.all]] call (site `pipeline`, task `<stage>/<table>`). No table
+    * reads another's files — each is built from the input through the
+    * shared memos, whose one lock builds shared work once — so no table
+    * waits for a stage barrier. On a failure the other tables' jobs are
+    * cancelled and, once their tasks have exited, one error names every
+    * failed table. A stage missing any table's `_SUCCESS` re-runs whole on
+    * the next run, which can go into the same directory as soon as this
+    * one has thrown.
+    */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       cfg: graft.linkage.LinkageConfig = graft.queries.LinkageQueries.config)
-      : Seq[StageResult] =
-    stagesFor(cfg).map { case (stage, tables) =>
-      val t0 = System.nanoTime()
-      val complete = tables.forall { case (t, _) =>
+      : Seq[StageResult] = {
+    val t0 = System.nanoTime()
+    val plan = stagesFor(cfg).map { case (stage, tables) =>
+      (stage, tables, tables.forall { case (t, _) =>
         new java.io.File(s"$outDir/$stage/$t/_SUCCESS").isFile
-      }
-      val timed = tables.map { case (t, fn) =>
-        if (complete) t -> 0.0
-        else {
-          val t1 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          // Deterministic artifact: one file, rows in full column order —
-          // row-identical across runs on the same input, byte-identical
-          // within one session (the spec pins this); see the object doc.
-          df.coalesce(1).sortWithinPartitions(df.columns.map(col): _*)
-            .write.mode("overwrite").parquet(s"$outDir/$stage/$t")
-          t -> (System.nanoTime() - t1) / 1e9
-        }
-      }
-      StageResult(stage, timed, skipped = complete, (System.nanoTime() - t0) / 1e9)
+      })
     }
+    val todo = for {
+      (stage, tables, complete) <- plan if !complete
+      (t, fn) <- tables
+    } yield s"$stage/$t" -> fn
+    val spans = Par.all(spark, "pipeline", todo.map { case (path, fn) =>
+      path -> { () =>
+        val t1 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        // Deterministic artifact: one file, rows in full column order —
+        // row-identical across runs on the same input, byte-identical
+        // within one session (the spec pins this); see the object doc.
+        df.coalesce(1).sortWithinPartitions(df.columns.map(col): _*)
+          .write.mode("overwrite").parquet(s"$outDir/$path")
+        (t1, System.nanoTime())
+      }
+    })
+    val written = todo.map(_._1).zip(spans).toMap
+    def span(stage: String, t: String) = written.get(s"$stage/$t")
+    val ends = plan.scanLeft(t0) { case (from, (stage, tables, _)) =>
+      tables.flatMap { case (t, _) => span(stage, t).map(_._2) }.foldLeft(from)(math.max)
+    }
+    plan.zip(ends.zip(ends.tail)).map { case ((stage, tables, complete), (from, to)) =>
+      StageResult(stage, tables.map { case (t, _) =>
+        t -> span(stage, t).fold(0.0) { case (a, b) => (b - a) / 1e9 }
+      }, skipped = complete, (to - from) / 1e9)
+    }
+  }
 
   /** `runMain graft.Pipeline <sfDir> <outDir> [config.yaml]` — the
     * optional third argument is the config-as-file surface
     * ([[graft.sources.ConfigFile]]): its linkage section (pass list,
     * lambda, threshold) drives the pass-keyed stage artifacts; omitted,
     * the hard-wired defaults apply (and `config/defaults.yaml` parses to
-    * exactly those, spec-pinned). Each written stage's line is followed by
-    * one line per table with its seconds (the memo builds it triggers
-    * included); after the stages it prints one line per registered
+    * exactly those, spec-pinned). Each written stage's line (with its
+    * window, see [[StageResult]]) is followed by one line per table with
+    * its seconds (the memo builds it triggers or waits on included); after
+    * the stages it prints one line per registered
     * [[Memo]]: its builds, hits and own build seconds.
     */
   def main(args: Array[String]): Unit = {
@@ -170,7 +216,7 @@ object Pipeline {
     val spark = GraftSession.builder("graft-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, cfg = cfg).foreach { r =>
-      val verb = if (r.skipped) "skipped (complete)" else f"wrote in ${r.sec}%.1f s"
+      val verb = if (r.skipped) "skipped (complete)" else f"written, window ${r.sec}%.1f s"
       println(s"[pipeline] ${r.stage}: ${r.tables.map(_._1).mkString(", ")} — $verb")
       if (!r.skipped) r.tables.foreach { case (t, sec) =>
         println(f"[pipeline]   table ${r.stage}/$t: $sec%.2f s")

@@ -59,19 +59,22 @@ object GraftFunctions {
   // Sessions already registered (weak keys: sessions can be GC'd). Keying
   // on the session — not on functionExists — means a name colliding with a
   // Spark builtin is REPLACED by the graft expression rather than silently
-  // shadowing it, while repeat calls stay warning-free.
+  // shadowing it, while repeat calls stay warning-free. Registration runs
+  // under the set's lock and marks the session last, so a concurrent
+  // caller returns only once every function resolves.
   private val registeredSessions: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  def register(spark: SparkSession): Unit =
-    if (registeredSessions.add(spark)) {
+  def register(spark: SparkSession): Unit = registeredSessions.synchronized {
+    if (!registeredSessions.contains(spark)) {
       val registry =
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
       expressions.foreach { case (name, builder) =>
         registry.createOrReplaceTempFunction(name, builder, "built-in")
       }
+      registeredSessions.add(spark)
     }
+  }
 
   def inject(ext: SparkSessionExtensions): Unit =
     expressions.foreach { case (name, builder) =>

@@ -114,11 +114,12 @@ object LinkageCascade {
 
   def score(pairsDf: DataFrame, comparisons: Seq[Comparison],
       constGammas: Map[String, Int] = Map.empty): DataFrame = {
-    val withGammas = comparisons.foldLeft(pairsDf) { (df, c) =>
-      df.withColumn(c.gammaName,
-        constGammas.get(c.name).map(g => lit(g)).getOrElse(FellegiSunter.gammaCol(c)))
-    }
-    withGammas.withColumn("match_weight", FellegiSunter.matchWeightCol(comparisons))
+    // One projection for every gamma: a withColumn per comparison would
+    // re-analyze the whole pair plan once each.
+    val gammas = comparisons.map(c => constGammas.get(c.name).map(g => lit(g))
+      .getOrElse(FellegiSunter.gammaCol(c)).as(c.gammaName))
+    pairsDf.select(col("*") +: gammas: _*)
+      .withColumn("match_weight", FellegiSunter.matchWeightCol(comparisons))
   }
 
   /** Post-search resolution (reference "post-search confirm" cells): keep
@@ -192,8 +193,7 @@ object LinkageCascade {
             s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
               s"was given only ${refs.keys.mkString(", ")}"))
           predict(census, input, pass, cfg)
-            .withColumn("pass", lit(pass.name))
-            .withColumn("ordinal", lit(ordinal))
+            .select(col("*"), lit(pass.name).as("pass"), lit(ordinal).as("ordinal"))
             .localCheckpoint()
         }
       })

@@ -97,11 +97,18 @@ object ConfigFile {
       }
     }.toSeq
 
+  /** A pass name becomes part of a table path
+    * (`splink_reports/<ref>__<name>`) and of a Spark job tag, which may not
+    * hold a comma: it must be non-empty, with no `,` or `/`.
+    */
   private def parsePasses(n: JsonNode): Seq[BlockingPass] =
-    n.elements.asScala.map { e =>
+    n.elements.asScala.zipWithIndex.map { case (e, i) =>
       def opt(k: String): Option[JsonNode] = Option(e.get(k))
+      val name = opt("name").map(_.asText).getOrElse("")
+      require(name.nonEmpty && !name.exists(",/".contains(_)),
+        s"pass ${i + 1} name '$name' must be non-empty, with no ',' or '/'")
       BlockingPass(
-        name = e.get("name").asText,
+        name = name,
         keys = strings(e.get("keys")),
         salt = opt("salt").map(_.asInt).getOrElse(1),
         rightRemap = opt("right_remap").map(strMap).getOrElse(Map.empty),

@@ -89,4 +89,19 @@ class ConfigFileSpec extends SparkTestBase {
         s"renamed pass ${p.name}_v2 missing from the artifact inventory")
     }
   }
+
+  test("a pass name that is empty or holds ',' or '/' is rejected, naming the pass") {
+    def passes(names: String*): String =
+      names.map(n => s"  - name: '$n'\n    keys: [zip3]\n").mkString(
+        "linkage:\n  passes:\n", "", "")
+    assert(ConfigFile.parse(passes("ok_1", "ok_2")).passes.map(_.name) ==
+      Seq("ok_1", "ok_2"))
+    Seq("a,b", "a/b", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](ConfigFile.parse(passes("ok", bad)))
+      assert(e.getMessage.contains(s"pass 2 name '$bad'"), e.getMessage)
+    }
+    val noName = "linkage:\n  passes:\n  - keys: [zip3]\n"
+    assert(intercept[IllegalArgumentException](ConfigFile.parse(noName))
+      .getMessage.contains("pass 1 name ''"))
+  }
 }

@@ -1,13 +1,14 @@
 package graft
 
 import java.util.Properties
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier, TimeUnit}
 
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{JobExecutionStatus, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Millis, Seconds, Span}
 
@@ -77,6 +78,30 @@ class ParSpec extends SparkTestBase with Eventually {
     }
   }
 
+  test("a failed call returns once its cancelled tasks exit, cancelling their late jobs") {
+    withJobs { jobs =>
+      val started = new CountDownLatch(1)
+      val exited = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val t0 = System.nanoTime()
+      val e = intercept[RuntimeException](Par.all(spark, "spec_quiet", Seq(
+        "stubborn" -> (() => {
+          started.countDown()
+          // Swallows its interrupt, then submits a job after the cancel.
+          try Thread.sleep(60000) catch { case _: InterruptedException => }
+          try ParSpec.runUntilKilled(spark) finally exited.set(true)
+        }),
+        "boom" -> (() => {
+          assert(started.await(30, TimeUnit.SECONDS))
+          throw new IllegalStateException("planted")
+        }))))
+      assert(exited.get, "Par.all returned while a cancelled task still ran")
+      assert((System.nanoTime() - t0) / 1e9 < 30)
+      assert(e.getMessage.contains("boom failed"), e.getMessage)
+      assert(e.getMessage.contains("stubborn cancelled"), e.getMessage)
+      assertEnded(jobsOf(jobs, "stubborn"))
+    }
+  }
+
   test("a call nested inside 25 concurrent tasks completes") {
     // Every outer task waits until all 25 run at once, and each inner
     // pair waits for its sibling: a pool bounded below the total fan-out
@@ -121,6 +146,28 @@ class ParSpec extends SparkTestBase with Eventually {
         assert(tagsOf(p).contains("spec_caller"))
         assert(tagsOf(p).exists(_.matches(s"graft-par:spec_context#\\d+:$n")), tagsOf(p))
       }
+    }
+  }
+
+  test("concurrent register on a fresh session returns only once every function resolves") {
+    // Checked in reverse registration order, right after a barrier
+    // release, so a caller returning early sees the last names missing.
+    val names = graft.functions.GraftFunctions.expressions.map(_._1).reverse
+    (1 to 20).foreach { round =>
+      val fresh = spark.newSession()
+      val registry = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.functionRegistry
+      val barrier = new CyclicBarrier(8)
+      val missing = Par.all(fresh, "spec_register", (1 to 8).map { i =>
+        s"r$i" -> { () =>
+          barrier.await(30, TimeUnit.SECONDS)
+          graft.functions.GraftFunctions.register(fresh)
+          names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
+        }
+      })
+      assert(missing.forall(_.isEmpty), s"round $round: unresolved after register: $missing")
+      assert(fresh.sql("SELECT jaro_winkler('MARTHA', 'MARHTA')").head().getDouble(0) ==
+        0.9611111111111111)
     }
   }
 

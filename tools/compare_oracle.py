@@ -77,4 +77,8 @@ for name in sorted(no_oracle):
     n = sum(len(pd.read_parquet(f)) for f in files) if files else 0
     print(f"ROWSONLY {name}: {n} rows")
 
+# Close before exiting rather than leave the connection to interpreter
+# teardown, where a run once aborted natively ("terminate called without an
+# active exception") after printing every result line.
+con.close()
 sys.exit(1 if fails else 0)
